@@ -1,59 +1,47 @@
-"""Warehouse catalog: partitioned-parquet table store with idempotent
-append (SURVEY.md §7.0 engine/catalog role).
+"""Warehouse catalog: the reference's tables as snapshot tables with
+idempotent append (SURVEY.md §7.0 engine/catalog role).
 
 Replaces the reference's PostgreSQL tables + per-row INSERT/probe
 round-trips (load_hhs.py:70-145) with:
-- partitioned parquet per table (partition keys in schemas.TABLE_PARTITIONS
-  — date-partitioned facts give partition-pruned queries and make the
-  dedup anti-join probe touch only the incoming batch's partitions)
-- idempotent append = left-anti join on the natural key then append
-  (D4 first-wins upsert; re-delivering a file is a no-op)
+- one ``snapshots.SnapshotTable`` per table at ``path(table)``,
+  partitioned by schemas.TABLE_PARTITIONS when that entry is non-empty
+  (date-partitioned facts: upserts and deletes rewrite only the dates
+  they touch)
+- idempotent append = left-anti join on the natural key then a blind
+  snapshot append (D4 first-wins upsert; re-delivering a file is a no-op)
 - quarantine sinks for rejected rows (load_hhs.py:152-155 pattern)
 
-Atomicity: one append = one Spark job writing through the parquet
-committer (task/job commit protocol), matching the reference's
-per-file transaction (load_hhs.py:148).  A Delta/Iceberg table format
-would add multi-writer isolation; out of scope for this store but the
-API is format-agnostic.
+Atomicity: every table change writes new, immutable data files and then
+publishes one manifest; that publish is the commit, matching the
+reference's per-file transaction (load_hhs.py:148).  A crash before it
+leaves the previous version readable and only orphan files behind,
+which the next ``vacuum`` collects.  ``delete_keys`` and ``compact``
+vacuum right after their commit, so deleted rows and pre-compaction
+files leave the disk at once; that vacuum assumes one writer per table.
+No session conf is touched: concurrent jobs in one session cannot see
+each other's write settings.
 
-100 TB notes: the anti-join's existing side reads ONLY the key columns
-(column pruning) of ONLY the partitions present in the incoming batch
-(partition pruning via the dynamic key-set filter) — so probe cost
-scales with the batch, not the table history.
+100 TB notes: the manifest names the data directories of the current
+snapshot (on a partitioned table, one leaf per partition value per
+commit), and Spark lists the files inside the directories it is given.  ``read`` takes an optional predicate on
+the partition keys, so a week-filtered dashboard query hands Spark only
+that week's leaves: the other weeks are never listed or opened.  The
+anti-join's existing side reads ONLY the key columns (column pruning),
+appends write only the batch, and upsert/delete rewrite only the
+partitions they touch while the new manifest reuses every other
+partition's files.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import TABLE_KEYS, TABLE_PARTITIONS, TABLE_SCHEMAS
-
-# Characters Spark/Hive percent-escape in partition directory names
-# (ExternalCatalogUtils.escapePathName: control chars, '"', '#', '%',
-# "'", '*', '/', ':', '=', '?', '\\', DEL, '{', '[', ']', '^').
-_PATH_ESCAPE_CHARS = (
-    set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {chr(0x7F)}
-)
-
-
-def _escape_path_name(s: str) -> str:
-    return "".join(
-        f"%{ord(ch):02X}" if ch in _PATH_ESCAPE_CHARS else ch for ch in s
-    )
-
-
-def _partition_dir(parts: Sequence[str], vals: Sequence) -> str:
-    """Relative partition directory exactly as Spark writes it (same
-    escaping + __HIVE_DEFAULT_PARTITION__ for NULL)."""
-    segs = []
-    for p, v in zip(parts, vals):
-        val = "__HIVE_DEFAULT_PARTITION__" if v is None else _escape_path_name(str(v))
-        segs.append(f"{_escape_path_name(p)}={val}")
-    return os.path.join(*segs)
+from .snapshots import SnapshotTable, tuples_filter
 
 
 class Warehouse:
@@ -64,19 +52,52 @@ class Warehouse:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def exists(self, table: str) -> bool:
+    def _table(self, table: str) -> SnapshotTable:
         path = self.path(table)
-        if not os.path.exists(path):
-            return False
-        # a partitioned dir with only _SUCCESS markers is still "empty"
-        for _, _, files in os.walk(path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        # a table written before the snapshot layout holds hive
+        # directories (or parquet files) and no manifest; reading it as
+        # empty would make a delete a silent no-op
+        if os.path.isdir(path) and any(
+            "=" in n or n.endswith(".parquet") for n in os.listdir(path)
+        ):
+            raise ValueError(
+                f"{path} is in the pre-snapshot hive layout, which is not "
+                "migrated: re-run the loads into a new warehouse root"
+            )
+        return SnapshotTable(self.spark, path, TABLE_PARTITIONS.get(table) or None)
 
-    def read(self, table: str) -> DataFrame:
-        """Read a table; empty DataFrame with the declared schema if absent."""
-        if not self.exists(table):
+    def _dirs(
+        self, table: str, keep: Callable[[str], bool] | None = None
+    ) -> list[str]:
+        """Data directories of the table's current snapshot; ``keep``
+        selects partitions by manifest key."""
+        # opening a SnapshotTable creates its directory; a read must not
+        if not os.path.isdir(self.path(table)):
+            return []
+        t = self._table(table)
+        v = t.current_version()
+        if not v:
+            return []
+        m = t.manifest(v)
+        if keep is None or not m.get("partitions"):
+            return m["dirs"]
+        return [d for k, ds in m["partitions"].items() if keep(k) for d in ds]
+
+    def exists(self, table: str) -> bool:
+        return bool(self._dirs(table))
+
+    def read(
+        self, table: str, keep: Callable[[str], bool] | None = None
+    ) -> DataFrame:
+        """Read a table; empty DataFrame with the declared schema if absent.
+
+        ``keep``: on a partitioned table, read only the partitions whose
+        manifest key (``str()`` of the value; ``yyyy-MM-dd`` for dates)
+        it accepts.  This is the listing-level pruning: Spark is handed
+        only those leaves.  The caller still filters the rows.
+        """
+        dirs = self._dirs(table, keep)
+        if not dirs:
             # 0-partition empty frame: createDataFrame([], schema)
             # parallelizes an empty list over defaultParallelism (= all
             # cores), so every downstream action on an absent table ran
@@ -86,9 +107,7 @@ class Warehouse:
             return self.spark.createDataFrame(
                 self.spark.sparkContext.emptyRDD(), TABLE_SCHEMAS[table]
             )
-        df = self.spark.read.schema(TABLE_SCHEMAS[table]).parquet(self.path(table))
-        # partition columns come back at the end; restore declared order
-        return df.select(*[f.name for f in TABLE_SCHEMAS[table].fields])
+        return self.spark.read.schema(TABLE_SCHEMAS[table]).parquet(*dirs)
 
     def append(
         self, df: DataFrame, table: str, sort_cols: Sequence[str] | None = None
@@ -101,36 +120,31 @@ class Warehouse:
         predicates on those columns skip whole row groups (the poor
         man's Z-order; pays one local sort per write, no shuffle).
         """
-        cols = [f.name for f in TABLE_SCHEMAS[table].fields]
-        out = df.select(*cols)
+        out = df.select(*[f.name for f in TABLE_SCHEMAS[table].fields])
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
-        writer = out.write.mode("append")
-        parts = TABLE_PARTITIONS.get(table, [])
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(self.path(table))
+        self._table(table).commit_append(out)
 
     def append_idempotent(
         self, df: DataFrame, table: str, keys: Sequence[str] | None = None
     ) -> int:
         """First-wins upsert (D4): insert rows whose key is absent.
 
-        Existing side is pruned to key columns; with a date partition key
-        in ``keys`` the probe scan prunes to the batch's partitions.
-        Returns the number of rows appended.
+        The existing side is pruned to the key columns.  Returns the
+        number of rows appended.
         """
         keys = list(keys or TABLE_KEYS[table])
         if self.exists(table):
-            existing = self.read(table).select(*keys)
-            fresh = df.join(existing, keys, "left_anti")
+            fresh = df.join(self.read(table).select(*keys), keys, "left_anti")
         else:
             # first load: anti-joining an empty existing side is a
             # no-op the optimizer cannot prove (the empty frame is an
             # RDD scan, not a LocalRelation) — skip the join outright
             fresh = df
-        # one deterministic winner per key *within* the batch as well
-        fresh = fresh.dropDuplicates(keys)
+        # one deterministic winner per key *within* the batch as well;
+        # the lazy checkpoint runs the anti-join once, in the count, and
+        # the partition-key probe and the write read its blocks
+        fresh = fresh.dropDuplicates(keys).localCheckpoint(eager=False)
         n = fresh.count()
         if n:
             self.append(fresh, table)
@@ -142,47 +156,19 @@ class Warehouse:
         """MERGE-style upsert: incoming rows REPLACE existing rows with
         the same key (the complement of append_idempotent's first-wins).
 
-        Emulated without a table format: for a partitioned table, only
-        the partitions present in the batch are rewritten (anti-join of
-        the old partition contents against the batch keys, union the
-        batch, dynamic partition overwrite) — cost scales with the batch
-        partitions, not table history.  Unpartitioned tables rewrite
-        whole (they are dimension-sized by design).  Returns batch rows
+        A snapshot upsert: on a partitioned table only the partitions
+        present in the batch are rewritten, so cost scales with the
+        batch partitions, not table history (``keys`` must then include
+        the partition columns).  Unpartitioned tables rewrite whole
+        (they are dimension-sized by design).  Returns batch rows
         applied.
         """
         keys = list(keys or TABLE_KEYS[table])
         cols = [f.name for f in TABLE_SCHEMAS[table].fields]
         batch = df.select(*cols).dropDuplicates(keys)
         n = batch.count()
-        if not n:
-            return 0
-        if not self.exists(table):
-            self.append(batch, table)
-            return n
-
-        parts = TABLE_PARTITIONS.get(table, [])
-        existing = self.read(table)
-        if parts:
-            part_vals = batch.select(*parts).distinct()
-            touched = existing.join(F.broadcast(part_vals), parts, "left_semi")
-            survivors = touched.join(batch.select(*keys), keys, "left_anti")
-            # materialize BEFORE overwriting the path being read from
-            merged = survivors.unionByName(batch).localCheckpoint()
-            spark = df.sparkSession
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    merged.write.mode("overwrite")
-                    .partitionBy(*parts)
-                    .parquet(self.path(table))
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        else:
-            survivors = existing.join(batch.select(*keys), keys, "left_anti")
-            merged = survivors.unionByName(batch).localCheckpoint()
-            merged.write.mode("overwrite").parquet(self.path(table))
+        if n:
+            self._table(table).commit_upsert(batch, keys)
         return n
 
     def delete_keys(
@@ -190,61 +176,25 @@ class Warehouse:
     ) -> int:
         """Targeted deletion ("right to be forgotten"): remove every row
         matching the key set, rewriting ONLY the partitions that contain
-        matches (anti-join survivors + dynamic partition overwrite, the
-        upsert_last_wins machinery inverted).
+        matches (a snapshot delete whose predicate is the distinct key
+        tuples, collected to the driver).
 
-        Partitions left empty by the delete are removed explicitly —
-        dynamic overwrite only replaces partitions present in the
-        written data, so a fully-deleted partition would otherwise
-        silently keep its old files (a real compliance bug).  Returns
-        rows deleted.
+        The vacuum that follows removes the rewritten partitions' old
+        files, so deleted rows leave the disk at once, not only the
+        current snapshot.  Returns rows deleted.
         """
         if not self.exists(table):
             return 0
         keys = list(keys)
-        key_set = keys_df.select(*keys).distinct()
-        existing = self.read(table)
-        doomed = existing.join(F.broadcast(key_set), keys, "left_semi")
-        n = doomed.count()
-        if not n:
+        key_set = [tuple(r) for r in keys_df.select(*keys).distinct().collect()]
+        if not key_set:
             return 0
-        parts = TABLE_PARTITIONS.get(table, [])
-        if not parts:
-            survivors = existing.join(F.broadcast(key_set), keys, "left_anti")
-            merged = survivors.localCheckpoint()
-            merged.write.mode("overwrite").parquet(self.path(table))
-            return n
-
-        doomed_parts = doomed.select(*parts).distinct()
-        part_vals = [tuple(r) for r in doomed_parts.collect()]
-        touched = existing.join(F.broadcast(doomed_parts), parts, "left_semi")
-        survivors = (
-            touched.join(F.broadcast(key_set), keys, "left_anti").localCheckpoint()
-        )
-        surviving_parts = {
-            tuple(r) for r in survivors.select(*parts).distinct().collect()
-        }
-        spark = keys_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                survivors.write.mode("overwrite")
-                .partitionBy(*parts)
-                .parquet(self.path(table))
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        # drop partition dirs the delete emptied entirely
-        import shutil
-
-        for vals in part_vals:
-            if vals not in surviving_parts:
-                d = os.path.join(self.path(table), _partition_dir(parts, vals))
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-        # pre-delete readers hold a stale file listing for this path
-        spark.catalog.refreshByPath(self.path(table))
+        doomed = tuples_filter(keys, key_set)
+        n = self.read(table).filter(doomed).count()
+        if n:
+            t = self._table(table)
+            t.commit_delete(doomed)
+            t.vacuum(retain_last=1)
         return n
 
     def compact(self, table: str, target_file_mb: int = 128) -> int:
@@ -254,44 +204,17 @@ class Warehouse:
         Incremental appends (weekly loads) accrete one small file per
         batch per partition; at warehouse scale the file-listing and
         per-file open costs come to dominate scans long before data
-        volume does.  Rewrite-to-temp then atomic swap keeps readers
-        consistent (single-writer assumption, same as the reference's
-        per-file transaction).  Returns the resulting file count.
+        volume does.  The rewrite is a snapshot commit, so readers see
+        the old files or the new ones, never a mix; the vacuum that
+        follows removes the old files.  Returns the resulting file
+        count.
         """
-        import shutil
-
         if not self.exists(table):
             return 0
-        df = self.read(table)
-        size_bytes = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(self.path(table))
-            for f in files
-            if f.endswith(".parquet")
-        )
-        n_files = max(1, round(size_bytes / (target_file_mb * 1024 * 1024)))
-
-        tmp = self.path(table) + ".compact_tmp"
-        cols = [f.name for f in TABLE_SCHEMAS[table].fields]
-        parts = TABLE_PARTITIONS.get(table, [])
-        # repartition by the partition columns so each output partition
-        # dir gets coalesced files (not one file per input task)
-        out = df.select(*cols)
-        out = out.repartition(n_files, *parts) if parts else out.repartition(n_files)
-        writer = out.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(tmp)
-
-        final = self.path(table)
-        shutil.rmtree(final)
-        os.rename(tmp, final)
-        return sum(
-            1
-            for _, _, files in os.walk(final)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        t = self._table(table)
+        t.compact(target_file_mb)
+        t.vacuum(retain_last=1)
+        return len(t.data_files())
 
     def quarantine(self, df: DataFrame, name: str) -> None:
         """Write rejected input rows verbatim (plus _failed_rules) as CSV,

@@ -40,17 +40,14 @@ def refresh_rollup(
     scoped = fact.filter(F.col(partition_col).isin(list(touched)))
     result = aggregate(scoped)
     n = result.count()
-    spark = fact.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            result.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(rollup_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the writer option, not the session conf: a job running alongside
+    # in the same session keeps its own overwrite mode
+    (
+        result.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(rollup_path)
+    )
     return n
 
 

@@ -6,14 +6,20 @@ Each function is (warehouse, params) -> DataFrame; the display edge
 never collect internally.
 
 Physical notes per query:
-- week/date equality filters hit the partition key -> partition-pruned
-  scans (the reference had no partitioning at all)
+- week/date filters on the partition key also select the partitions to
+  read from the snapshot manifest (``_keys``), so the scan is handed
+  only the matching weeks' leaves (the reference had no partitioning
+  at all)
 - the quality⋈beds joins broadcast the quality snapshot (one row per
   facility per snapshot date — small relative to the weekly fact)
 - top-k via orderBy().limit() -> TakeOrderedAndProject (no global sort)
 """
 
 from __future__ import annotations
+
+import datetime as dt
+import operator
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -22,9 +28,21 @@ from ..catalog import Warehouse
 from ..operators.topk import top_and_bottom, top_k
 
 
+def _keys(op: Callable[[str, str], bool], date: str) -> Callable[[str], bool] | None:
+    """Partition-key predicate ``key <op> date`` for ``Warehouse.read``:
+    keys are ``yyyy-MM-dd`` strings, which order like the dates.  None
+    (read every partition) when ``date`` is not ``yyyy-M-d``; the row
+    filter is exact either way."""
+    try:
+        key = dt.datetime.strptime(str(date), "%Y-%m-%d").date().isoformat()
+    except ValueError:
+        return None
+    return lambda k: op(k, key)
+
+
 def q1_records_for_week(wh: Warehouse, week: str) -> DataFrame:
     """COUNT(*) of bed records for one week (Reporting.py:29-33)."""
-    beds = wh.read("hospital_bed_information")
+    beds = wh.read("hospital_bed_information", _keys(operator.eq, week))
     return beds.filter(F.col("collection_week") == F.lit(week).cast("date")).agg(
         F.count("*").alias("n_records")
     )
@@ -32,7 +50,7 @@ def q1_records_for_week(wh: Warehouse, week: str) -> DataFrame:
 
 def q2_weekly_record_counts(wh: Warehouse, before_week: str) -> DataFrame:
     """Weekly record counts strictly before a week (Reporting.py:36-41)."""
-    beds = wh.read("hospital_bed_information")
+    beds = wh.read("hospital_bed_information", _keys(operator.lt, before_week))
     return (
         beds.filter(F.col("collection_week") < F.lit(before_week).cast("date"))
         .groupBy("collection_week")
@@ -43,7 +61,7 @@ def q2_weekly_record_counts(wh: Warehouse, before_week: str) -> DataFrame:
 
 def q3_bed_sums_for_week(wh: Warehouse, week: str) -> DataFrame:
     """5 rounded sums of bed metrics for one week (Reporting.py:59-67)."""
-    beds = wh.read("hospital_bed_information")
+    beds = wh.read("hospital_bed_information", _keys(operator.eq, week))
     cols = {
         "total_adult_beds": "all_adult_hospital_beds_7_day_avg",
         "total_pediatric_beds": "all_pediatric_inpatient_beds_7_day_avg",
@@ -94,7 +112,7 @@ def q5_bed_usage_by_rating(wh: Warehouse) -> DataFrame:
 
 def q6_total_bed_usage(wh: Warehouse, up_to_week: str) -> DataFrame:
     """Total vs COVID bed usage per week up to a week (Reporting.py:144-156)."""
-    beds = wh.read("hospital_bed_information")
+    beds = wh.read("hospital_bed_information", _keys(operator.le, up_to_week))
     total = (
         F.col("all_adult_hospital_inpatient_bed_occupied_7_day_coverage")
         + F.col("all_pediatric_inpatient_bed_occupied_7_day_avg")
@@ -155,7 +173,9 @@ def q8b_top_bottom_rated_states(wh: Warehouse, data_date: str, k: int = 10) -> D
     """Top-k and bottom-k states by average rating for one snapshot
     (Reporting.py:243-263 — the client-side pandas groupby/sort/head is
     done engine-side)."""
-    quality = wh.read("hospital_quality_information").filter(
+    quality = wh.read(
+        "hospital_quality_information", _keys(operator.eq, data_date)
+    ).filter(
         (F.col("data_date") == F.lit(data_date).cast("date"))
         & F.col("hospital_overall_rating").isNotNull()
     )

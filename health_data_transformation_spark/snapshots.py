@@ -64,6 +64,28 @@ class SchemaEvolutionError(RuntimeError):
     """Batch schema conflicts with the table schema (type change)."""
 
 
+def tuples_filter(cols: Sequence[str], tuples: list[tuple]):
+    """Membership predicate ``(cols) IN tuples``: one column compiles
+    to ``col IN (...)``, several to an OR of ANDs of literal
+    equalities.  A NULL in ``tuples`` never matches."""
+    import functools
+    import operator
+
+    from pyspark.sql import functions as _F
+
+    if len(cols) == 1:
+        return _F.col(cols[0]).isin([t[0] for t in tuples])
+    return functools.reduce(
+        operator.or_,
+        (
+            functools.reduce(
+                operator.and_, (_F.col(c) == v for c, v in zip(cols, t))
+            )
+            for t in tuples
+        ),
+    )
+
+
 class SnapshotTable:
     """``partition_by`` (optional: a column name or an ORDERED list of
     column names, VERDICT r11 task #3) turns on partition-scoped
@@ -77,10 +99,10 @@ class SnapshotTable:
     legacy ``str(value)`` key, so pre-existing manifests read
     unchanged.  Partition values must be non-null, non-empty, free of
     ``/`` (the key separator), and stable under ``str()``
-    round-tripping through a path segment (ints and plain strings —
-    the hive-style key Spark writes).  The choice is recorded in every
-    manifest; a later opener passing a DIFFERENT spec fails loudly,
-    and one passing None adopts the recorded spec."""
+    round-tripping through a path segment (ints, plain strings and
+    dates — the hive-style key Spark writes).  The choice is recorded
+    in every manifest; a later opener passing a DIFFERENT spec fails
+    loudly, and one passing None adopts the recorded spec."""
 
     def __init__(
         self,
@@ -544,31 +566,33 @@ class SnapshotTable:
         return self._publish(v, [new_dir], "overwrite", df.schema)
 
     def _check_partition_types(self, schema: StructType) -> None:
-        """Enforce the documented 'ints and plain strings' contract
-        (r12 review catch): manifest keys come from Python ``str()``
-        while directory keys come from Spark's hive path segment, and
-        for types where the two renderings diverge (boolean:
-        str(True)='True' vs hive 'true'; similar for dates/floats/
-        decimals) the touched-set and rebase comparisons would
-        silently corrupt — with the rebase, divergence means a LOST
-        winner update, not just a missed reuse.  Fail loudly at the
-        type level instead."""
+        """Enforce the documented 'ints, plain strings and dates'
+        contract: manifest keys come from Python
+        ``str()`` while directory keys come from Spark's hive path
+        segment, and for types where the two renderings diverge
+        (boolean: str(True)='True' vs hive 'true'; similar for
+        timestamps/floats/decimals) the touched-set and rebase
+        comparisons would silently corrupt — with the rebase,
+        divergence means a LOST winner update, not just a missed
+        reuse.  Dates agree: both render ``yyyy-MM-dd``.  Fail loudly
+        at the type level instead."""
         from pyspark.sql.types import (
             ByteType,
+            DateType,
             IntegerType,
             LongType,
             ShortType,
             StringType,
         )
 
-        ok = (StringType, ByteType, ShortType, IntegerType, LongType)
+        ok = (StringType, ByteType, ShortType, IntegerType, LongType, DateType)
         for c in self._pcols:
             dt = schema[c].dataType
             if not isinstance(dt, ok):
                 raise TypeError(
                     f"partition column {c!r} has type "
                     f"{dt.simpleString()}; partition-scoped commits "
-                    "require string or integral partition columns — "
+                    "require string or integral (or date) partition columns — "
                     "other types do not render identically via Python "
                     "str() (manifest keys) and the hive path segment "
                     "(directory keys), which would corrupt the "
@@ -612,24 +636,7 @@ class SnapshotTable:
         parquet scan as PushedFilters, so the survivor-rewrite scan
         prunes untouched leaves at file level (each leaf holds one
         partition tuple)."""
-        import functools
-        import operator
-
-        from pyspark.sql import functions as _F
-
-        pcols = self._pcols
-        if len(pcols) == 1:
-            return _F.col(pcols[0]).isin([t[0] for t in tuples])
-        return functools.reduce(
-            operator.or_,
-            (
-                functools.reduce(
-                    operator.and_,
-                    (_F.col(c) == v for c, v in zip(pcols, t)),
-                )
-                for t in tuples
-            ),
-        )
+        return tuples_filter(self._pcols, tuples)
 
     def commit_upsert(self, df: DataFrame, keys: Sequence[str]) -> int:
         """MERGE: batch rows replace same-key rows, others survive.
@@ -776,10 +783,11 @@ class SnapshotTable:
 
     # -- maintenance ---------------------------------------------------------
 
-    def compact(self) -> int:
+    def compact(self, target_file_mb: int = 128) -> int:
         """OPTIMIZE: rewrite the current snapshot's (possibly many,
-        possibly small) data directories into ONE new directory and
-        publish it as a content-identical new version.
+        possibly small) data directories into ONE new directory of
+        ~``target_file_mb`` files and publish it as a content-identical
+        new version.
 
         Append-heavy tables accumulate a directory per commit; readers
         then plan over thousands of small files (the small-files
@@ -787,11 +795,16 @@ class SnapshotTable:
         runs as just another snapshot commit: old versions still time
         travel, concurrent committers still conflict atomically, and
         nothing is deleted until :meth:`vacuum`.  On a partitioned
-        table the same rewrite applies per partition.
+        table the same rewrite applies per partition: the rows are
+        repartitioned by the partition columns, so each partition's
+        rows land in whole files rather than one file per input task.
         """
         v = self.current_version() + 1
         schema = self._table_schema(v - 1)
         cur = self.read()
+        size_bytes = sum(os.path.getsize(f) for f in self.data_files(v - 1))
+        n_files = max(1, round(size_bytes / (target_file_mb * 1024 * 1024)))
+        cur = cur.repartition(n_files, *(self._pcols or []))
         if self.partition_by is not None:
             new_map = self._write_data_partitioned(cur, v, "compact")
             parts = {k: [d] for k, d in new_map.items()}
@@ -854,6 +867,18 @@ class SnapshotTable:
         return removed
 
     # -- reads ---------------------------------------------------------------
+
+    def data_files(self, version: int | None = None) -> list[str]:
+        """Parquet files of a snapshot (default latest), listed from
+        its manifest's directories."""
+        v = self.current_version() if version is None else version
+        return [
+            os.path.join(d, f)
+            for top in self._read_manifest(v)["dirs"]
+            for d, _, files in os.walk(top)
+            for f in files
+            if f.endswith(".parquet")
+        ]
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot-isolated read; ``version`` pins a historical state

@@ -12,8 +12,9 @@ The 100 TB join story has three tiers:
 
 `tests/test_bucketed.py` asserts the no-Exchange property from the
 physical plan.  Caveats encoded here: both sides must agree on bucket
-count and key, and the session must not auto-broadcast the smaller
-side (that would be tier 1 winning anyway).
+count and key, and the smaller side must not be auto-broadcast (that
+would be tier 1 winning anyway) — ``cobucketed_join`` pins the
+sort-merge join with a hint, so no session conf needs changing.
 """
 
 from __future__ import annotations
@@ -47,7 +48,11 @@ def cobucketed_join(
 ) -> DataFrame:
     """Join two tables bucketed on ``on`` with the same bucket count.
 
-    Plain ``join`` — Catalyst recognizes the matching output
-    partitioning from the bucket spec and elides both exchanges.
+    A ``merge`` hint pins the sort-merge join (a broadcast would win
+    below ``autoBroadcastJoinThreshold``); Catalyst recognizes the
+    matching output partitioning from the bucket spec and elides both
+    exchanges.
     """
-    return spark.table(left_table).join(spark.table(right_table), list(on))
+    return spark.table(left_table).join(
+        spark.table(right_table).hint("merge"), list(on)
+    )

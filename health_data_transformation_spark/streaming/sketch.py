@@ -43,8 +43,9 @@ def stream_count_min_cells(
     The input is re-staged as n_chunks files and consumed with
     ``maxFilesPerTrigger=1`` so the merge loop genuinely runs more than
     once.  Each batch: build cells for the batch, add to the stored
-    grid, atomically publish a new version directory (same
-    write-then-swap discipline as Warehouse.compact).
+    grid, write it as a new version directory and only then point the
+    merge state at it (the write-then-publish order of
+    snapshots.SnapshotTable commits).
     """
     ensure_compat(spark)
     static = spark.read.parquet(f"{sf_dir}/events.parquet").select(key_col)

@@ -32,25 +32,22 @@ def test_cobucketed_join_has_no_exchange(spark, bucket_db):
     write_bucketed(orders, f"{bucket_db}.orders_b", ["orderkey"], 8, ["orderkey"])
     write_bucketed(lineitem, f"{bucket_db}.lineitem_b", ["orderkey"], 8, ["orderkey"])
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = cobucketed_join(
-            spark, f"{bucket_db}.orders_b", f"{bucket_db}.lineitem_b", ["orderkey"]
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # the entire point of bucketing
+    # the session's broadcast threshold is left as it is: the join's own
+    # hint must keep the plan a sort-merge join without an exchange
+    joined = cobucketed_join(
+        spark, f"{bucket_db}.orders_b", f"{bucket_db}.lineitem_b", ["orderkey"]
+    )
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan
+    assert "Exchange" not in plan  # the entire point of bucketing
 
-        # and it is still *correct*: equals the plain join row count
-        expected = (
-            load_table(spark, sf, "orders")
-            .join(
-                load_table(spark, sf, "lineitem"),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
-            .count()
+    # and it is still *correct*: equals the plain join row count
+    expected = (
+        load_table(spark, sf, "orders")
+        .join(
+            load_table(spark, sf, "lineitem"),
+            F.col("o_orderkey") == F.col("l_orderkey"),
         )
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        .count()
+    )
+    assert joined.count() == expected

@@ -270,20 +270,37 @@ def test_load_hhs_all_invalid_file(spark, warehouse, tmp_path):
 
 
 def test_warehouse_scan_prunes_partitions(spark, warehouse, hhs_csv_1):
-    """A collection_week filter on the partitioned fact table must reach
-    the scan as a partition filter (pruning, not post-scan filtering)."""
+    """A collection_week filter on the partitioned fact table must prune
+    before the scan (not post-scan filtering): the read selects the
+    week's partitions from the snapshot manifest, so the scan is handed
+    only that week's leaf directories."""
     import datetime as dt
+    import os
+    from urllib.parse import urlparse
+
+    from health_data_transformation_spark.plans.hospital_queries import (
+        q1_records_for_week,
+    )
+    from health_data_transformation_spark.snapshots import SnapshotTable
 
     load_hhs(spark, hhs_csv_1, warehouse)
-    df = warehouse.read("hospital_bed_information").filter(
-        F.col("collection_week") == dt.date(2022, 9, 23)
-    )
+    week = dt.date(2022, 9, 23)
+    df = warehouse.read(
+        "hospital_bed_information", lambda k: k == str(week)
+    ).filter(F.col("collection_week") == week)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
-    # the partition predicate appears in PartitionFilters, and pruning
-    # leaves a single matching partition directory to read
+    # the week predicate stays on the scan as a row filter
     assert plan.count("collection_week") >= 1
     assert df.count() == 3  # H1, H2, H3 for that week
+    # pruning: the files read, by this read and by the dashboard's Q1,
+    # all sit in that week's leaves, though other weeks are on disk
+    t = SnapshotTable(spark, warehouse.path("hospital_bed_information"))
+    parts = t.manifest(t.current_version())["partitions"]
+    assert len(parts) > 1
+    for frame in (df, q1_records_for_week(warehouse, str(week))):
+        leaves = {os.path.dirname(urlparse(f).path) for f in frame.inputFiles()}
+        assert leaves and leaves <= set(parts[str(week)])
 
 
 def test_dynamic_partition_pruning_from_dim_filter(spark, tmp_path):

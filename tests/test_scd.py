@@ -159,3 +159,20 @@ def test_delete_keys_right_to_be_forgotten(spark, warehouse, hhs_csv_1):
         warehouse.path("hospital_bed_information"), "collection_week=2022-09-30"
     )
     assert not os.path.isdir(part_dir)
+    # ... and so must its key in the manifest
+    from health_data_transformation_spark.snapshots import SnapshotTable
+
+    t = SnapshotTable(spark, warehouse.path("hospital_bed_information"))
+    assert "2022-09-30" not in t.manifest(t.current_version())["partitions"]
+    # erased from disk, not only from the current snapshot: no parquet
+    # file anywhere under the table still holds an H1 row
+    from health_data_transformation_spark.schemas import TABLE_SCHEMAS
+
+    on_disk = (
+        spark.read.schema(TABLE_SCHEMAS["hospital_bed_information"])
+        .option("recursiveFileLookup", True)
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(warehouse.path("hospital_bed_information"))
+    )
+    assert on_disk.count() == n_before - 2
+    assert on_disk.filter(F.col("hospital_fk") == "H1").count() == 0

@@ -994,6 +994,26 @@ def test_partition_key_roundtrip_through_hive_path(spark, tmp_path):
     t2.commit_delete("p = -5")
     assert "-5" not in t2.manifest(2)["partitions"]
     assert t2.manifest(2)["partitions"]["0"] == t2.manifest(1)["partitions"]["0"]
+    # date keys: str(date) and the hive segment are both yyyy-MM-dd
+    import datetime as dt
+
+    days = [dt.date(2022, 9, 23), dt.date(2022, 9, 30), dt.date(1999, 12, 31)]
+    t3 = SnapshotTable(spark, str(tmp_path / "t3"), partition_by="p")
+    t3.commit_overwrite(
+        spark.createDataFrame(
+            [(i, d, i * 10) for i, d in enumerate(days)], "k int, p date, x int"
+        )
+    )
+    assert set(t3.manifest(1)["partitions"]) == {str(d) for d in days}
+    t3.commit_upsert(
+        spark.createDataFrame([(0, days[0], 99)], "k int, p date, x int"),
+        keys=["k", "p"],
+    )
+    t3.commit_delete("p = DATE '2022-09-30'")
+    m3 = t3.manifest(3)["partitions"]
+    assert set(m3) == {"2022-09-23", "1999-12-31"}
+    assert m3["1999-12-31"] == t3.manifest(1)["partitions"]["1999-12-31"]
+    assert rows(t3.read()) == [(0, days[0], 99), (2, days[2], 20)]
 
 
 def test_partitioned_upsert_and_delete_still_reject_bad_keys(spark, tmp_path):
