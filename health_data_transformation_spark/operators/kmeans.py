@@ -61,7 +61,7 @@ def int_kmeans(
     centroids(cluster, centroid))`` with integer-array centroids.
 
     The centroids are what an IVF build persists (VERDICT r10 task #7:
-    ``build_ivf_cells`` took the n_cells lowest-id vectors as
+    ``build_ivf_store`` takes the n_cells lowest-id vectors as
     centroids — deterministic but arbitrary; Lloyd refinement tightens
     cell balance, see SCALE.md §8.13b) and what probe-time cell
     selection scores against with the SAME exact-integer d2 rule."""

@@ -15,14 +15,9 @@ partition pruning at the scan.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 from ..functions.vector import dot, norm
-
-
-def _with_query(df: DataFrame, query: DataFrame, vec_col: str) -> DataFrame:
-    """Attach the (single-row) query vector to every row via broadcast."""
-    return df.crossJoin(F.broadcast(query))
 
 
 def apply_pair_budget(
@@ -195,7 +190,7 @@ def cosine_scores(
     # query norm folded once into the broadcast row, not once per scanned
     # row; dot/(nv*nq) is bit-identical to the recomputed-cosine expr
     query = query.withColumn("_qnorm", norm(query_col))
-    scored = _with_query(df, query, vec_col)
+    scored = df.crossJoin(F.broadcast(query))  # the single query row
     sim = dot(F.col(vec_col), F.col(query_col)) / (
         norm(F.col(vec_col)) * F.col("_qnorm")
     )
@@ -223,22 +218,35 @@ def brute_force_top_k(
     )
 
 
-def build_ivf_cells(
+def build_ivf_store(
     df: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_cells: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
-    """Deterministic IVF coarse quantizer: build (assigned, centroids).
+    """The persistable ANN serving index — §8.12's store pattern
+    applied to IVF (VERDICT r9 task #4: q73 rebuilt cells per query).
 
-    Centroids are the ``n_cells`` lowest-id vectors (deterministic seed
-    choice; a production build would Lloyd-refine them — the assignment
-    machinery, which is the scale-critical part, is identical).  Each
-    vector joins the broadcast centroid set once and keeps its best cell
-    by cosine: one narrow pass, no shuffle of the vector table.
+    Deterministic coarse quantizer: the centroids are the ``n_cells``
+    lowest-id vectors (:func:`build_ivf_store_lloyd` Lloyd-refines
+    them); each vector joins the broadcast centroid set once and keeps
+    its best cell by cosine — one narrow pass, no shuffle of the vector
+    table.  Returns the two frames the caller writes ONCE per corpus
+    delivery (or probes in memory):
 
-    Returns (df + 'cell' column, centroids(cell, centroid, _cnorm)).
+      * ``assigned``: the input plus its ``cell`` id and the
+        precomputed vector norm ``_vnorm`` — written sorted (or
+        partitioned) by ``cell`` so probe-time cell filters prune
+        parquet row groups / partitions, and scored at probe time
+        without re-folding norms (the q43 O(n)-not-O(pairs) rule);
+      * ``centroids``: ``(cell, _centroid, _cnorm)`` — tiny
+        (``n_cells`` rows), read whole per query batch.
+
+    ``n_cells`` is stamped as column metadata on ``cell`` (persisted in
+    parquet footers) so over-probing fails loudly — the ADVICE-r9
+    params-with-the-store contract, same as ``build_lsh_store``.
     """
+    meta = {"hdt_n_cells": n_cells}
     centroids = (
         df.orderBy(id_col)
         .limit(n_cells)
@@ -248,76 +256,100 @@ def build_ivf_cells(
         )
         .withColumn("_cnorm", norm("_centroid"))
     )
-    scored = df.crossJoin(F.broadcast(centroids))
+    # each vector's norm folds once, not once per (vector, centroid)
+    # pair, and is the stored ``_vnorm`` (same double either way)
     sim = dot(F.col(vec_col), F.col("_centroid")) / (
-        norm(F.col(vec_col)) * F.col("_cnorm")
+        F.col("_vnorm") * F.col("_cnorm")
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("cell"))
     assigned = (
-        scored.withColumn("_csim", sim)
+        df.withColumn("_vnorm", norm(vec_col))
+        .crossJoin(F.broadcast(centroids))
+        .withColumn("_csim", sim)
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
         .drop("_centroid", "_cnorm", "_csim", "_rk")
-    )
-    return assigned, centroids
-
-
-def ivf_search(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    n_probes: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_col: str = "qv",
-) -> DataFrame:
-    """Probe the ``n_probes`` nearest cells, exact top-k inside them.
-
-    At scale ``assigned`` is partitioned by cell, so the probe filter is
-    partition pruning and search cost ~ n_probes/n_cells of the table.
-    Delegates through :func:`ivf_search_stored` (one code path, so the
-    recompute and persisted-store serving paths cannot drift — the
-    q332 twin discipline applied to ANN serving).
-    """
-    return ivf_search_stored(
-        assigned, centroids, query, k=k, n_probes=n_probes,
-        vec_col=vec_col, id_col=id_col, query_col=query_col,
-    )
-
-
-def build_ivf_store(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """The persistable ANN serving index — §8.12's store pattern
-    applied to IVF (VERDICT r9 task #4: q73 rebuilt cells per query;
-    dedup got its persisted index in r9, this is the search-side twin).
-
-    Returns the two frames the caller writes ONCE per corpus delivery:
-
-      * ``assigned``: the input plus its ``cell`` id and the
-        precomputed vector norm ``_vnorm`` — written sorted (or
-        partitioned) by ``cell`` so probe-time cell filters prune
-        parquet row groups / partitions, and scored at probe time
-        without re-folding norms over the corpus (the q43
-        O(n)-not-O(pairs) rule applied across deliveries);
-      * ``centroids``: ``(cell, _centroid, _cnorm)`` — tiny
-        (``n_cells`` rows), read whole per query batch.
-
-    ``n_cells`` is stamped as column metadata on ``cell`` (persisted in
-    parquet footers) so a probe asking for more probes than the store
-    has cells fails loudly — the ADVICE-r9 params-with-the-store
-    contract, same as ``build_lsh_store``.
-    """
-    assigned, centroids = build_ivf_cells(df, vec_col, id_col, n_cells)
-    meta = {"hdt_n_cells": n_cells}
-    assigned = assigned.withColumn("_vnorm", norm(vec_col)).withMetadata(
-        "cell", meta
+        .withMetadata("cell", meta)
     )
     return assigned, centroids.withMetadata("cell", meta)
+
+
+def _scored_cells(
+    assigned: DataFrame,
+    centroids: DataFrame,
+    q: DataFrame,
+    n_probes: int,
+    vec_col: str,
+    id_col: str,
+    query_col: str,
+) -> tuple[DataFrame, list[Column]]:
+    """The one store check and cell scoring of the IVF probes.
+
+    Crosses the normed queries ``q`` with the broadcast centroid table
+    and scores every (query, cell) by the metric the store's format
+    implies: a :func:`build_ivf_store_lloyd` store (``_centroid_int``,
+    ``hdt_rounds`` stamped) ranks cells by the exact-integer d2 its
+    assignment used, a :func:`build_ivf_store` store (``_centroid``) by
+    cosine — read from the store, never chosen by a caller, so a probe
+    cannot rank cells by a metric the assignment did not use.  Refuses
+    frames lacking the store columns and ``n_probes`` above the stamped
+    ``n_cells``.  Returns the scored frame and the probe order (best
+    cell first, lowest cell id on ties; each query has n_cells rows).
+    """
+    meta = (
+        centroids.schema["cell"].metadata or {}
+        if "cell" in centroids.columns
+        else {}
+    )
+    lloyd = "_centroid_int" in centroids.columns or "hdt_rounds" in meta
+    if lloyd:
+        builder, need = "build_ivf_store_lloyd", {"cell", "_centroid_int"}
+    else:
+        builder, need = "build_ivf_store", {"cell", "_centroid", "_cnorm"}
+    for frame, cols, name in (
+        (assigned, {"cell", vec_col, id_col}, "assigned"),
+        (centroids, need, "centroids"),
+    ):
+        missing = cols - set(frame.columns)
+        if missing:
+            raise ValueError(
+                f"store frame '{name}' lacks column(s) {sorted(missing)}; "
+                f"build it with {builder}"
+            )
+    if "hdt_n_cells" in meta and n_probes > int(meta["hdt_n_cells"]):
+        raise ValueError(
+            f"n_probes={n_probes} exceeds the store's n_cells="
+            f"{int(meta['hdt_n_cells'])} ({builder} metadata) — probing "
+            "every cell is a full scan; rebuild with more cells or lower "
+            "n_probes"
+        )
+    if lloyd:
+        from ..functions.vector import int8_quantize
+        from .kmeans import _d2
+
+        # quantize once per query, not once per (query, cell)
+        cq = q.withColumn("_qq", int8_quantize(query_col)).crossJoin(
+            F.broadcast(centroids)
+        )
+        score = _d2(F.col("_qq"), F.col("_centroid_int"))
+        return cq.withColumn("_qs", score), [F.asc("_qs"), F.asc("cell")]
+    cq = q.crossJoin(F.broadcast(centroids))
+    score = dot(F.col("_centroid"), F.col(query_col)) / (
+        F.col("_cnorm") * F.col("_qnorm")
+    )
+    return cq.withColumn("_qs", score), [F.desc("_qs"), F.asc("cell")]
+
+
+def _floored_sim(assigned: DataFrame, vec_col: str, query_col: str) -> Column:
+    """The exact floored cosine every IVF probe verifies with (the
+    brute_force_top_k/cosine_scores expression), reading the store's
+    precomputed ``_vnorm`` when present instead of re-folding norms."""
+    vnorm = (
+        F.col("_vnorm") if "_vnorm" in assigned.columns else norm(F.col(vec_col))
+    )
+    sim = dot(F.col(vec_col), F.col(query_col)) / (vnorm * F.col("_qnorm"))
+    quant = F.lit(float(10 ** 6))
+    return F.floor(sim * quant) / quant
 
 
 def ivf_search_stored(
@@ -330,61 +362,31 @@ def ivf_search_stored(
     id_col: str = "vec_id",
     query_col: str = "qv",
 ) -> DataFrame:
-    """IVF search against a PRE-BUILT (typically parquet-persisted)
-    index — result-identical to :func:`ivf_search` on the same frames
-    (``ivf_search`` delegates here; pinned by
-    test_ivf_store_path_equals_recompute).
+    """Single-query IVF search against a store — in memory or
+    parquet-persisted, result-identical either way (pinned by
+    test_ivf_store_path_equals_recompute), and the per-query reference
+    :func:`ivf_search_batch` is checked against.
 
-    Per-query work: score ``n_cells`` stored centroids against the
-    broadcast query (tiny), collect the ``n_probes`` best cell ids
-    (driver state bounded by ``n_probes`` by construction), filter the
-    stored assignment table to those cells — on a cell-sorted or
-    cell-partitioned store that filter prunes row groups / partitions,
-    so probe IO is ~ n_probes/n_cells of the table — and take the
-    exact floored-cosine top-k inside them, reusing the store's
-    precomputed ``_vnorm`` when present instead of re-folding norms.
+    Per-query work: score the ``n_cells`` stored centroids against the
+    query by the store's metric (tiny), collect the ``n_probes`` best
+    cell ids (driver state bounded by ``n_probes`` by construction) and
+    apply them as a literal IN filter on the assignment table — on a
+    cell-sorted or cell-partitioned store that filter prunes parquet
+    row groups / partitions, so probe IO is ~ n_probes/n_cells of the
+    table — then take the exact floored-cosine top-k inside them.
+    Returns (id, sim).
     """
-    for frame, need, name in (
-        (assigned, {"cell", vec_col, id_col}, "assigned"),
-        (centroids, {"cell", "_centroid", "_cnorm"}, "centroids"),
-    ):
-        missing = need - set(frame.columns)
-        if missing:
-            raise ValueError(
-                f"store frame '{name}' lacks column(s) {sorted(missing)}; "
-                "build it with build_ivf_store"
-            )
-    meta = centroids.schema["cell"].metadata or {}
-    if "hdt_n_cells" in meta and n_probes > int(meta["hdt_n_cells"]):
-        raise ValueError(
-            f"n_probes={n_probes} exceeds the store's n_cells="
-            f"{int(meta['hdt_n_cells'])} (build_ivf_store metadata) — "
-            "probing every cell is a full scan; rebuild with more cells "
-            "or lower n_probes"
-        )
     q = query.withColumn("_qnorm", norm(query_col))
-    cent_scored = centroids.crossJoin(F.broadcast(q)).withColumn(
-        "_qsim",
-        dot(F.col("_centroid"), F.col(query_col))
-        / (F.col("_cnorm") * F.col("_qnorm")),
+    scored, order = _scored_cells(
+        assigned, centroids, q, n_probes, vec_col, id_col, query_col
     )
     probes = [
-        r["cell"]
-        for r in cent_scored.orderBy(F.desc("_qsim"), F.asc("cell"))
-        .limit(n_probes)
-        .collect()
+        r["cell"] for r in scored.orderBy(*order).limit(n_probes).collect()
     ]
     filtered = assigned.filter(F.col("cell").isin(probes))
-    # same floored-cosine expression as brute_force_top_k/cosine_scores,
-    # with the stored norm substituted when the store provides it
-    vnorm = (
-        F.col("_vnorm") if "_vnorm" in assigned.columns else norm(F.col(vec_col))
-    )
-    scored = _with_query(filtered, q, vec_col)
-    sim = dot(F.col(vec_col), F.col(query_col)) / (vnorm * F.col("_qnorm"))
-    quant = F.lit(float(10 ** 6))
     return (
-        scored.withColumn("sim", F.floor(sim * quant) / quant)
+        filtered.crossJoin(F.broadcast(q))
+        .withColumn("sim", _floored_sim(assigned, vec_col, query_col))
         .select(F.col(id_col), F.col("sim"))
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
@@ -404,7 +406,9 @@ def ivf_search_batch(
 ) -> DataFrame:
     """Exact floored-cosine top-k for MANY queries in ONE plan — the
     shape a serving/labeling pipeline actually runs (k-NN for a whole
-    batch of embeddings), with NO per-query driver round trip.
+    batch of embeddings), with NO per-query driver round trip.  Serves
+    both store formats; cells rank by the metric the store's centroid
+    columns imply (:func:`_scored_cells`).
 
     :func:`ivf_search_stored` collects each query's probe cells on the
     driver — right for interactive single queries, O(|Q|) collects for
@@ -414,7 +418,9 @@ def ivf_search_batch(
     group is exactly n_cells rows — never corpus-sized), and the probe
     set — |Q| x n_probes rows carrying the query vector and its
     precomputed norm — is BROADCAST against the stored assignment
-    table's cell key.  Candidate volume is the inherent
+    table's cell key.  Verification inside probed cells is the exact
+    floored cosine on the RAW vectors with stored norms, for either
+    store format.  Candidate volume is the inherent
     ~|Q| x n_probes/n_cells x |corpus|; the final per-query top-k runs
     through the two-phase ``top_k_per_group_scalable`` so no query's
     candidate set funnels through one task.
@@ -428,72 +434,27 @@ def ivf_search_batch(
     Returns (query_id, id, sim, rank) with rank 1..k per query,
     tiebroken (sim desc, id asc) — engine-stable and oracle-exact.
     """
-    for frame, need, name in (
-        (assigned, {"cell", vec_col, id_col}, "assigned"),
-        (centroids, {"cell", "_centroid", "_cnorm"}, "centroids"),
-    ):
-        missing = need - set(frame.columns)
-        if missing:
-            raise ValueError(
-                f"store frame '{name}' lacks column(s) {sorted(missing)}; "
-                "build it with build_ivf_store"
-            )
-    meta = centroids.schema["cell"].metadata or {}
-    if "hdt_n_cells" in meta and n_probes > int(meta["hdt_n_cells"]):
-        raise ValueError(
-            f"n_probes={n_probes} exceeds the store's n_cells="
-            f"{int(meta['hdt_n_cells'])} — see ivf_search_stored"
-        )
+    from .topk import top_k_per_group_scalable
+
     q = queries.select(query_id_col, query_col).withColumn(
         "_qnorm", norm(query_col)
     )
-    cq = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "_qsim",
-        dot(F.col("_centroid"), F.col(query_col))
-        / (F.col("_cnorm") * F.col("_qnorm")),
+    scored, order = _scored_cells(
+        assigned, centroids, q, n_probes, vec_col, id_col, query_col
     )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.desc("_qsim"), F.asc("cell")
-    )
+    wq = Window.partitionBy(query_id_col).orderBy(*order)
     probes = (
-        cq.withColumn("_pr", F.row_number().over(wq))
+        scored.withColumn("_pr", F.row_number().over(wq))
         .filter(F.col("_pr") <= n_probes)
         .select(query_id_col, "cell", query_col, "_qnorm")
     )
-    return _probe_cells_topk(
-        assigned, probes, k, vec_col, id_col, query_col, query_id_col
-    )
-
-
-def _probe_cells_topk(
-    assigned: DataFrame,
-    probes: DataFrame,
-    k: int,
-    vec_col: str,
-    id_col: str,
-    query_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Shared tail of the batch IVF searches (cosine-probed
-    ``ivf_search_batch`` and integer-d2-probed
-    ``ivf_lloyd_search_batch``): broadcast the |Q| x n_probes probe
-    set against the stored assignment table's cell key, score the
-    exact floored cosine with stored norms, and run the two-phase
-    per-query top-k.  Returns (query_id, id, sim, rank)."""
-    vnorm = (
-        F.col("_vnorm") if "_vnorm" in assigned.columns else norm(F.col(vec_col))
-    )
-    sim = dot(F.col(vec_col), F.col(query_col)) / (vnorm * F.col("_qnorm"))
-    quant = F.lit(float(10 ** 6))
-    scored = (
+    cands = (
         assigned.join(F.broadcast(probes), "cell")
-        .withColumn("sim", F.floor(sim * quant) / quant)
+        .withColumn("sim", _floored_sim(assigned, vec_col, query_col))
         .select(query_id_col, F.col(id_col), F.col("sim"))
     )
-    from .topk import top_k_per_group_scalable
-
     return top_k_per_group_scalable(
-        scored,
+        cands,
         [query_id_col],
         [F.desc("sim"), F.asc(id_col)],
         k,
@@ -509,7 +470,7 @@ def build_ivf_store_lloyd(
     rounds: int = 2,
 ) -> tuple[DataFrame, DataFrame]:
     """Lloyd-REFINED persistable IVF index (VERDICT r10 task #7:
-    ``build_ivf_cells`` takes the n_cells lowest-id vectors as
+    ``build_ivf_store`` takes the n_cells lowest-id vectors as
     centroids — deterministic but arbitrary, and cell balance suffers;
     §8.13b measures the refinement tightening max-cell skew).
 
@@ -521,10 +482,10 @@ def build_ivf_store_lloyd(
 
       * ``assigned``: the input + its Lloyd ``cell`` + precomputed
         ``_vnorm`` — write sorted/partitioned by ``cell``;
-      * ``centroids``: ``(cell, _centroid_int array<long>)`` — tiny,
-        scored at probe time with the SAME exact-integer d2 rule the
-        assignment used (metric consistency: a vector lives in the
-        cell a probe ranks first for it).
+      * ``centroids``: ``(cell, _centroid_int array<long>)`` — tiny;
+        the IVF probes see ``_centroid_int`` and score it with the SAME
+        exact-integer d2 rule the assignment used (metric consistency:
+        a vector lives in the cell a probe ranks first for it).
 
     ``n_cells``/``rounds`` are stamped as column metadata on ``cell``
     (the params-with-the-store contract; over-probing fails loudly).
@@ -544,65 +505,6 @@ def build_ivf_store_lloyd(
         F.col("cluster").alias("cell"), F.col("centroid").alias("_centroid_int")
     ).withMetadata("cell", meta)
     return assigned, centroids
-
-
-def ivf_lloyd_search_batch(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_probes: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_col: str = "qv",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Batch k-NN against the Lloyd-refined store — the
-    :func:`ivf_search_batch` shape (probe selection IN the plan, no
-    per-query driver round trip) with probe ranking by the store's own
-    exact-integer d2 rule: each query int8-quantizes, crosses the
-    broadcast integer-centroid table, and a per-query window keeps the
-    ``n_probes`` NEAREST cells (d2 asc, cell asc — every window group
-    is exactly n_cells rows).  Verification inside probed cells is the
-    exact floored cosine on the RAW vectors with stored norms, same as
-    every other serving path.  Returns (query_id, id, sim, rank).
-    """
-    from ..functions.vector import int8_quantize
-    from .kmeans import _d2
-
-    for frame, need, name in (
-        (assigned, {"cell", vec_col, id_col}, "assigned"),
-        (centroids, {"cell", "_centroid_int"}, "centroids"),
-    ):
-        missing = need - set(frame.columns)
-        if missing:
-            raise ValueError(
-                f"store frame '{name}' lacks column(s) {sorted(missing)}; "
-                "build it with build_ivf_store_lloyd"
-            )
-    meta = centroids.schema["cell"].metadata or {}
-    if "hdt_n_cells" in meta and n_probes > int(meta["hdt_n_cells"]):
-        raise ValueError(
-            f"n_probes={n_probes} exceeds the store's n_cells="
-            f"{int(meta['hdt_n_cells'])} — see ivf_search_stored"
-        )
-    q = queries.select(query_id_col, query_col).withColumn(
-        "_qnorm", norm(query_col)
-    ).withColumn("_qq", int8_quantize(query_col))
-    cq = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "_qd2", _d2(F.col("_qq"), F.col("_centroid_int"))
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.asc("_qd2"), F.asc("cell")
-    )
-    probes = (
-        cq.withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= n_probes)
-        .select(query_id_col, "cell", query_col, "_qnorm")
-    )
-    return _probe_cells_topk(
-        assigned, probes, k, vec_col, id_col, query_col, query_id_col
-    )
 
 
 def ivf_top_k(
@@ -774,6 +676,7 @@ def embedding_lsh_pairs(
     if max_bucket is not None and pair_budget is not None:
         raise ValueError("pass max_bucket or pair_budget, not both")
     from ..functions.vector import int8_quantize, int_dot
+    from .dedup import _cap_buckets
 
     if pre_dedup_exact:
         # fingerprint=True: the dedup shuffle key is 16 B, not the raw
@@ -783,18 +686,9 @@ def embedding_lsh_pairs(
     sigs = embedding_lsh_signature(df, n_planes, vec_col, dim).select(
         id_col, "lsh_sig", int8_quantize(vec_col).alias("_q")
     )
-    if max_bucket is not None:
-        # windowed count, not groupBy+join-back: one shuffle on the
-        # same key the pair join needs anyway (dedup._cap_buckets'
-        # measured shape)
-        sizes = Window.partitionBy("lsh_sig")
-        sigs = (
-            sigs.withColumn("_sn", F.count("*").over(sizes))
-            .filter(F.col("_sn") <= max_bucket)
-            .drop("_sn")
-        )
-    if pair_budget is not None:
-        sigs = apply_pair_budget(sigs, "lsh_sig", pair_budget)
+    # windowed count, not groupBy+join-back: one shuffle on the same
+    # key the pair join needs anyway
+    sigs = _cap_buckets(sigs, max_bucket, pair_budget, key="lsh_sig")
     a = sigs.select(
         F.col("lsh_sig"), F.col(id_col).alias("id_a"), F.col("_q").alias("qa")
     )

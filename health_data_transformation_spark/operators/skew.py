@@ -157,6 +157,16 @@ def salted_join(
     return hot_joined.unionByName(cold_joined)
 
 
+#: The ``min_bytes`` floor of the text-pipeline widen sites (q162, q200,
+#: q275).  SCALE.md §8.15 measured the widen a loss at sf0.1 (~255 KB
+#: plan-stats estimate) and a 2x win at a 16x replica (~4 MB estimate);
+#: the crossover lies somewhere in that bracket and was not pinned
+#: further.  The floor sits at 2 MiB, below the 4 MB point, so the
+#: widen already fires at every size where it was measured winning,
+#: while staying an order of magnitude above the size where it lost.
+WIDEN_MIN_BYTES = 2 << 20
+
+
 def widen_coarse_scan(
     df: DataFrame, key: str | Column, min_bytes: int = 0
 ) -> DataFrame:
@@ -211,13 +221,20 @@ def widen_coarse_scan(
 def plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for ``df``'s optimized plan (bytes;
     file-size-derived for scan-rooted frames), or -1 when unavailable.
-    Driver-side only — never executes the frame."""
+    Driver-side only — never executes the frame.
+
+    A plan without statistics (an RDD-backed frame, some data source
+    relations) reports ``spark.sql.defaultSizeInBytes`` — a placeholder,
+    not a size — so an estimate at or above it is -1 too (ADVICE r13):
+    every caller's "unknown" branch is its fail-safe one."""
     try:
-        return int(
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
         return -1
+    return -1 if size >= conf.defaultSizeInBytes() else size
 
 
 def coarse_scan_width(df: DataFrame) -> int:

@@ -14,6 +14,9 @@ crash is safe because the append itself is an idempotent anti-join
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -115,64 +118,157 @@ def stream_load_quality(
     return reports
 
 
+class _Admission(NamedTuple):
+    """One streaming admission gate: which table streams in, how its
+    corpus store is built and persisted, and how an arrival probes it."""
+
+    table: str
+    id_col: str
+    value_col: str
+    key: str  # signature column the buckets store is sorted on
+    payload_dir: str  # the verification table's store directory
+    build: Callable  # corpus -> (buckets, payload)
+    probe: Callable  # (buckets, payload, arrival) -> verdicts
+
+
+def _admission(kind: str) -> _Admission:
+    """The q181 (``text``) and q338 (``vector``) gates.  Both caps are
+    derived corpus-side at build time (``cap_budget``) and stamped in
+    the store's footer metadata; the probes read the stamp by default
+    (``max_bucket=STORED``), so admission is batch-independent with no
+    constant here (VERDICT r10 wrong #3: the previous hard-coded
+    max_bucket=50 fails OPEN as corpus buckets outgrow it — §8.11b /
+    §8.11c — and a per-microbatch pair_budget would make admission
+    depend on the arrival split)."""
+    from ..operators import dedup
+
+    if kind == "text":
+        return _Admission(
+            "documents", "doc_id", "text", "bucket", "_store_tokens",
+            lambda corpus: dedup.build_lsh_store(
+                corpus, band_size=4, num_hashes=8,
+                cap_budget=dedup.ADMISSION_CAP_BUDGET,
+            ),
+            lambda sb, sp, bdf: dedup.lsh_incremental_matches_stored(
+                sb, sp, bdf, band_size=4, num_hashes=8, min_jaccard=0.4,
+            ),
+        )
+    return _Admission(
+        "embeddings", "vec_id", "embedding", "lsh_sig", "_store_vectors",
+        lambda corpus: dedup.build_embedding_lsh_store(
+            corpus, cap_budget=dedup.ADMISSION_CAP_BUDGET
+        ),
+        lambda sb, sp, bdf: dedup.embedding_incremental_matches_stored(
+            sb, sp, bdf, min_cosine=0.3,
+        ),
+    )
+
+
+def _build_admission_store(spark, sf_dir: str, dest: str, kind: str) -> str:
+    """Persist the stored corpus (id % 7 != 3) of an admission gate
+    under ``dest``: the signature buckets sorted on their key and the
+    verification table sorted on ``id_c``, so probe IN filters prune
+    row groups."""
+    import os
+
+    from ..functions.actions import overlap_actions
+    from ..sources.tables import load_table
+
+    a = _admission(kind)
+    d = load_table(spark, sf_dir, a.table).select(a.id_col, a.value_col)
+    buckets, payload = a.build(d.filter(~(F.col(a.id_col) % 7 == 3)))
+    overlap_actions([  # independent writes overlapped (guide §2.6, r13)
+        lambda: buckets.sort(a.key).write.parquet(
+            os.path.join(dest, "_store_buckets")),
+        lambda: payload.sort("id_c").write.parquet(
+            os.path.join(dest, a.payload_dir)),
+    ])
+    return dest
+
+
+def _admission_stream(
+    spark, sf_dir: str, timeout_sec: int, store_dir: str | None, kind: str
+):
+    """The one body of the two streaming admission gates: the batch
+    rows (id % 7 = 3) arrive as TWO microbatch files (split by id
+    parity, maxFilesPerTrigger=1) and ``foreachBatch`` probes the
+    persisted corpus store with each arrival, appending verdicts to a
+    result sink."""
+    import os
+    import tempfile
+    import uuid
+
+    from ..sources.tables import load_table
+    from .windows import stage_file
+
+    a = _admission(kind)
+    d = load_table(spark, sf_dir, a.table).select(a.id_col, a.value_col)
+    batch = d.filter(F.col(a.id_col) % 7 == 3)
+
+    stage = tempfile.mkdtemp(prefix=f"hdt_stream_{kind}_")
+    out_dir = os.path.join(stage, "_verdicts")
+    # the corpus's probe-side index, persisted ONCE before any arrival
+    # (at 100 TB this is the stored corpus's own ingest-time signature
+    # pass, not per-stream work).  ``store_dir`` reuses a store
+    # persisted by build_text_store / build_vector_store (bench.py's
+    # store_split times the build separately — VERDICT r10 task #5);
+    # default builds it inline, the delivery-cycle shape the q181/q338
+    # differentials gate end to end.
+    if store_dir is None:
+        store_dir = stage
+        _build_admission_store(spark, sf_dir, store_dir, kind)
+    sb = spark.read.parquet(os.path.join(store_dir, "_store_buckets"))
+    sp = spark.read.parquet(os.path.join(store_dir, a.payload_dir))
+
+    for parity in (0, 1):
+        stage_file(
+            batch.filter(F.col(a.id_col) % 2 == parity),
+            stage, f"arrival{parity + 1}.parquet",
+        )
+
+    def admit(bdf, batch_id: int) -> None:
+        # max_bucket defaults to the store's stamped admission cap
+        a.probe(sb, sp, bdf).write.mode("append").parquet(out_dir)
+
+    stream = (
+        spark.readStream.schema(batch.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+    # NO narrow_shuffle here (r12): these streams are STATELESS
+    # (admission consults only the persisted store; foreachBatch has no
+    # stateful operator, so there are no per-partition state stores to
+    # amortize) and the per-batch exact verify is the CPU-dense stage —
+    # capping shuffle width to 8 only throttled it to a quarter of the
+    # machine.  The stateful streams (windows.py, the interval joins)
+    # keep the cap, which is what it exists for.
+    query = (
+        stream.writeStream.foreachBatch(admit)
+        .queryName(f"{kind}_admission_{uuid.uuid4().hex[:8]}")
+        .option(
+            "checkpointLocation", os.path.join(stage, "_checkpoint")
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination(timeout_sec)
+    return spark.read.parquet(out_dir)
+
+
 def build_text_store(spark, sf_dir: str, dest: str) -> str:
     """q181's one-time store build: the stored corpus (doc_id % 7 != 3)
     -> LSH band-bucket + token-set parquet stores under ``dest``,
     sorted on the probe keys, admission cap derived corpus-side and
-    stamped (see stream_incremental_dedup).  Split out so bench.py's
-    store_split can time build and stream separately (VERDICT r10
-    task #5)."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ..operators.dedup import ADMISSION_CAP_BUDGET, build_lsh_store
-    from ..sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter(~(F.col("doc_id") % 7 == 3))
-    buckets, tokens = build_lsh_store(
-        corpus, band_size=4, num_hashes=8, cap_budget=ADMISSION_CAP_BUDGET
-    )
-    from ..functions.actions import overlap_actions
-
-    overlap_actions([  # independent writes overlapped (guide §2.6, r13)
-        lambda: buckets.sort("bucket").write.parquet(
-            os.path.join(dest, "_store_buckets")),
-        lambda: tokens.sort("id_c").write.parquet(
-            os.path.join(dest, "_store_tokens")),
-    ])
-    return dest
+    stamped.  Split out so bench.py's store_split can time build and
+    stream separately (VERDICT r10 task #5)."""
+    return _build_admission_store(spark, sf_dir, dest, "text")
 
 
 def build_vector_store(spark, sf_dir: str, dest: str) -> str:
-    """q338's one-time store build — the vector twin of
-    :func:`build_text_store` (signature buckets + vectors with
-    precomputed norms, derived admission cap stamped)."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ..operators.dedup import (
-        ADMISSION_CAP_BUDGET,
-        build_embedding_lsh_store,
-    )
-    from ..sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    corpus = e.filter(~(F.col("vec_id") % 7 == 3))
-    buckets, vectors = build_embedding_lsh_store(
-        corpus, cap_budget=ADMISSION_CAP_BUDGET
-    )
-    from ..functions.actions import overlap_actions
-
-    overlap_actions([  # independent writes overlapped (guide §2.6, r13)
-        lambda: buckets.sort("lsh_sig").write.parquet(
-            os.path.join(dest, "_store_buckets")),
-        lambda: vectors.sort("id_c").write.parquet(
-            os.path.join(dest, "_store_vectors")),
-    ])
-    return dest
+    """q338's one-time store build — :func:`build_text_store` for the
+    vector gate (signature buckets + vectors with precomputed norms,
+    derived admission cap stamped)."""
+    return _build_admission_store(spark, sf_dir, dest, "vector")
 
 
 def stream_incremental_dedup(
@@ -185,117 +281,26 @@ def stream_incremental_dedup(
     documents is gated against the STORED corpus before landing.
 
     The batch twin is ``operators.dedup.lsh_incremental_matches``
-    (q178); here the batch documents (doc_id % 7 = 3) arrive as TWO
-    microbatch files (split by doc parity, maxFilesPerTrigger=1) and
-    ``foreachBatch`` runs the identical admission semantics per
-    microbatch, appending verdicts to a result sink.  Because admission
-    only ever consults the stored corpus (never other batch docs), the
-    union of per-microbatch verdicts EQUALS the batch result — which is
-    what the q181 oracle (the same relational statement as q178's)
-    verifies end to end.  State story at 100 TB: the corpus signature
-    table is the probe-side index; streaming state itself is empty (no
-    watermark needed — admission is stateless given the store), so
-    arrival granularity changes nothing.
+    (q178); here the batch documents (doc_id % 7 = 3) arrive as two
+    microbatch files and ``foreachBatch`` runs the identical admission
+    semantics per microbatch.  Because admission only ever consults the
+    stored corpus (never other batch docs), the union of per-microbatch
+    verdicts EQUALS the batch result — which is what the q181 oracle
+    (the same relational statement as q178's) verifies end to end.
+    State story at 100 TB: the corpus signature table is the probe-side
+    index; streaming state itself is empty (no watermark needed —
+    admission is stateless given the store), so arrival granularity
+    changes nothing.
 
-    Since r9 the "probe-side index" line is literal: the corpus's LSH
-    store (``dedup.build_lsh_store`` — band buckets + token sets) is
-    PERSISTED once before the stream starts, and each microbatch
-    probes it with ``lsh_incremental_matches_stored`` — signing only
-    the arrival.  The prior shape re-signed and re-tokenized the full
-    corpus INSIDE every ``foreachBatch`` call, i.e. O(history) per
-    microbatch — the §8.12-measured cost the store exists to remove
-    (and the worst place to pay it: microbatches are the highest-
-    frequency ingest path).  Results are knob-for-knob identical
-    (test_lsh_store_path_equals_recompute; q181's oracle re-verifies
-    end to end).
+    The corpus's LSH store (``dedup.build_lsh_store`` — band buckets +
+    token sets) is PERSISTED once before the stream starts, and each
+    microbatch probes it with ``lsh_incremental_matches_stored`` —
+    signing only the arrival, never re-signing the corpus per
+    microbatch (the §8.12-measured O(history) cost the store exists to
+    remove).  Results are knob-for-knob identical to the recompute
+    path (test_lsh_store_path_equals_recompute).
     """
-    import os
-    import tempfile
-    import uuid
-
-    import pyspark.sql.functions as F
-
-    from ..operators.dedup import lsh_incremental_matches_stored
-    from ..sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    in_batch = F.col("doc_id") % 7 == 3
-    corpus = d.filter(~in_batch)
-    batch_docs = d.filter(in_batch)
-
-    stage = tempfile.mkdtemp(prefix="hdt_stream_inc_")
-    out_dir = os.path.join(stage, "_verdicts")
-
-    # the corpus's probe-side index, persisted ONCE before any arrival
-    # (at 100 TB this is the stored corpus's own ingest-time signature
-    # pass, not per-stream work); bucket-/id-sorted so probe IN filters
-    # can prune row groups
-    # cap_budget derives the admission cap CORPUS-SIDE at build time
-    # and stamps it in the store's footer metadata (VERDICT r10 wrong
-    # #3: the previous hard-coded max_bucket=50 fails OPEN — §8.11b /
-    # §8.11c — as corpus buckets outgrow the constant; a per-microbatch
-    # pair_budget would make admission batch-dependent).  The probe
-    # below reads the stamp by default, so admission stays
-    # batch-independent with no constant in this file.
-    # ``store_dir`` reuses a store persisted by build_text_store
-    # (bench.py's store_split times the build separately — VERDICT r10
-    # task #5); default builds it inline, the delivery-cycle shape the
-    # q181 differential gates end to end.
-    if store_dir is None:
-        store_dir = stage
-        build_text_store(spark, sf_dir, store_dir)
-    sb = spark.read.parquet(os.path.join(store_dir, "_store_buckets"))
-    st = spark.read.parquet(os.path.join(store_dir, "_store_tokens"))
-
-    def stage_file(df, name: str) -> None:
-        # the file stream source lists plain files, not nested dirs:
-        # write a single-part parquet dir, then hoist its part file up
-        # as stage/<name>
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.rename(os.path.join(tmp, part), os.path.join(stage, name))
-
-    stage_file(
-        batch_docs.filter(F.col("doc_id") % 2 == 0), "arrival1.parquet"
-    )
-    stage_file(
-        batch_docs.filter(F.col("doc_id") % 2 == 1), "arrival2.parquet"
-    )
-
-    def admit(bdf, batch_id: int) -> None:
-        # max_bucket defaults to the store's stamped admission cap
-        lsh_incremental_matches_stored(
-            sb, st, bdf, band_size=4, num_hashes=8, min_jaccard=0.4,
-        ).write.mode("append").parquet(out_dir)
-
-    stream = (
-        spark.readStream.schema(batch_docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    # NO narrow_shuffle here (r12): this stream is STATELESS (admission
-    # consults only the persisted store; foreachBatch has no stateful
-    # operator, so there are no per-partition state stores to amortize)
-    # and the per-batch exact-Jaccard verify is the CPU-dense stage —
-    # capping shuffle width to 8 only throttled it to a quarter of the
-    # machine.  The stateful streams (windows.py, the interval joins)
-    # keep the cap, which is what it exists for.
-    name = f"inc_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.writeStream.foreachBatch(admit)
-        .queryName(name)
-        .option(
-            "checkpointLocation", os.path.join(stage, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return spark.read.parquet(out_dir)
+    return _admission_stream(spark, sf_dir, timeout_sec, store_dir, "text")
 
 
 def stream_embedding_admission(
@@ -306,97 +311,22 @@ def stream_embedding_admission(
 ):
     """Streaming SemDeDup admission for VECTORS: each arriving
     microbatch of embeddings is gated against the stored corpus's
-    persisted signature index before landing — the vector twin of
-    :func:`stream_incremental_dedup` (q181), completing the streaming
-    surface's symmetry with the batch family
-    (q178/q331/q332 text :: q333/q334 vectors :: q181/q338 streams).
+    persisted signature index before landing — the vector gate of
+    :func:`stream_incremental_dedup` (q181), one body with it.
 
     The corpus's embedding LSH store (``dedup.build_embedding_lsh_store``
     — signature buckets + vectors with precomputed norms) is persisted
     ONCE before the stream starts; batch vectors (vec_id % 7 = 3)
-    arrive as TWO microbatch files (split by id parity,
-    maxFilesPerTrigger=1) and ``foreachBatch`` probes the store with
-    ``embedding_incremental_matches_stored`` — signing only the
-    arrival.  The bucket guard is CORPUS-SIDE on purpose: a
-    per-microbatch ``pair_budget`` would derive its keep-set from that
-    microbatch's probe counts, so the union of arrival verdicts could
-    differ from the whole-batch result; a corpus-side cap is
-    batch-independent, so admission is stateless given the store and
-    the union over ANY arrival granularity EQUALS the batch result.
-    Since r11 the cap is DERIVED at build time
-    (``dedup.derive_admission_cap``: min(cap_budget, max corpus bucket
-    size) for this 1-band store) and stamped in the store's footer
-    metadata — §8.11b/§8.11c measured the previous hard-coded constant
-    failing OPEN as buckets outgrow it — and the probe reads the stamp
-    by default; the q338 oracle (q333's statement with the derived-cap
-    CTEs swapped in) verifies the whole story end to end.  State story
-    at 100 TB: identical to q181 — the store is the probe-side index,
-    streaming state itself is empty, no watermark needed.
+    arrive as two microbatch files and ``foreachBatch`` probes the
+    store with ``embedding_incremental_matches_stored`` — signing only
+    the arrival.  The bucket guard is the corpus-side admission cap
+    (min(cap_budget, max corpus bucket size) for this 1-band store),
+    derived and stamped at build time, so the union over ANY arrival
+    granularity EQUALS the batch result; the q338 oracle (q333's
+    statement with the derived-cap CTEs swapped in) verifies that end
+    to end.
     """
-    import os
-    import tempfile
-    import uuid
-
-    import pyspark.sql.functions as F
-
-    from ..operators.dedup import embedding_incremental_matches_stored
-    from ..sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    in_batch = F.col("vec_id") % 7 == 3
-    corpus = e.filter(~in_batch)
-    batch_vecs = e.filter(in_batch)
-
-    stage = tempfile.mkdtemp(prefix="hdt_stream_emb_")
-    out_dir = os.path.join(stage, "_verdicts")
-
-    # derived corpus-side admission cap, stamped at build time — see
-    # stream_incremental_dedup (VERDICT r10 wrong #3); ``store_dir``
-    # reuses a build_vector_store persist (bench store_split)
-    if store_dir is None:
-        store_dir = stage
-        build_vector_store(spark, sf_dir, store_dir)
-    sb = spark.read.parquet(os.path.join(store_dir, "_store_buckets"))
-    sv = spark.read.parquet(os.path.join(store_dir, "_store_vectors"))
-
-    def stage_file(df, name: str) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.rename(os.path.join(tmp, part), os.path.join(stage, name))
-
-    stage_file(batch_vecs.filter(F.col("vec_id") % 2 == 0), "arrival1.parquet")
-    stage_file(batch_vecs.filter(F.col("vec_id") % 2 == 1), "arrival2.parquet")
-
-    def admit(bdf, batch_id: int) -> None:
-        # max_bucket defaults to the store's stamped admission cap
-        embedding_incremental_matches_stored(
-            sb, sv, bdf, min_cosine=0.3,
-        ).write.mode("append").parquet(out_dir)
-
-    stream = (
-        spark.readStream.schema(batch_vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    # stateless admission stream: no narrow_shuffle, same reasoning as
-    # stream_incremental_dedup (the exact-cosine verify is CPU-dense
-    # and there is no streaming state to amortize)
-    name = f"emb_admission_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.writeStream.foreachBatch(admit)
-        .queryName(name)
-        .option(
-            "checkpointLocation", os.path.join(stage, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return spark.read.parquet(out_dir)
+    return _admission_stream(spark, sf_dir, timeout_sec, store_dir, "vector")
 
 
 def stream_static_enrich(
@@ -430,7 +360,7 @@ def stream_static_enrich(
     from ..functions.deterministic import day_str
     from ..functions.text import hex_hash64
     from ..sources.tables import load_events_range
-    from .windows import narrow_shuffle
+    from .windows import narrow_shuffle, stage_file
 
     ev = load_events_range(spark, sf_dir, lo=lo, hi=hi).select(
         "event_id", "ts", "user_id", "event_type"
@@ -447,17 +377,8 @@ def stream_static_enrich(
     stage = tempfile.mkdtemp(prefix="hdt_stream_enrich_")
     out_dir = os.path.join(stage, "_enriched")
 
-    def stage_file(df, name: str) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.rename(os.path.join(tmp, part), os.path.join(stage, name))
-
-    stage_file(ev.filter(F.col("event_id") % 2 == 0), "arrival1.parquet")
-    stage_file(ev.filter(F.col("event_id") % 2 == 1), "arrival2.parquet")
+    stage_file(ev.filter(F.col("event_id") % 2 == 0), stage, "arrival1.parquet")
+    stage_file(ev.filter(F.col("event_id") % 2 == 1), stage, "arrival2.parquet")
 
     def enrich(bdf, batch_id: int) -> None:
         (
@@ -521,7 +442,7 @@ def stream_exactly_once_sink(
     import pyspark.sql.functions as F
 
     from ..sources.tables import load_events_range
-    from .windows import narrow_shuffle
+    from .windows import narrow_shuffle, stage_file
 
     ev = load_events_range(spark, sf_dir, lo=lo, hi=hi).select(
         "event_id", "ts", "user_id", "event_type"
@@ -530,24 +451,18 @@ def stream_exactly_once_sink(
     stage = tempfile.mkdtemp(prefix="hdt_stream_eos_")
     out_dir = os.path.join(stage, "_sink")
 
-    def stage_file(df, name: str, mtime: float) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(stage, name)
-        os.rename(os.path.join(tmp, part), dst)
-        # pin arrival order (file source orders by mtime): the replay
-        # below assumes arrival1 WAS batch 0
-        os.utime(dst, (mtime, mtime))
-
     import time as _time
 
+    # pin arrival order (file source orders by mtime): the replay
+    # below assumes arrival1 WAS batch 0
     now = _time.time()
-    stage_file(ev.filter(F.col("event_id") % 2 == 0), "arrival1.parquet", now - 120)
-    stage_file(ev.filter(F.col("event_id") % 2 == 1), "arrival2.parquet", now)
+    stage_file(
+        ev.filter(F.col("event_id") % 2 == 0), stage, "arrival1.parquet",
+        now - 120,
+    )
+    stage_file(
+        ev.filter(F.col("event_id") % 2 == 1), stage, "arrival2.parquet", now
+    )
 
     def write_batch(bdf, batch_id: int) -> None:
         (
@@ -585,6 +500,93 @@ def stream_exactly_once_sink(
     return spark.read.parquet(out_dir)
 
 
+def _click_purchase_join(
+    spark,
+    sf_dir: str,
+    lo: str,
+    hi: str,
+    timeout_sec: int,
+    *,
+    name: str,
+    watermark: str,
+    how: str,
+    arrivals: Callable,
+):
+    """The one body of the stream-stream interval joins (q238 inner,
+    q244 left outer): each click joins the same user's purchases inside
+    [click_ts, click_ts + 2h], both sides from their own watermarked
+    file source, appended to a parquet sink.  ``arrivals(clicks,
+    purchases)`` lists the staged microbatch files as (frame,
+    ``"clicks"``/``"purchases"``, file name, mtime); the pinned mtimes
+    make the arrival order deterministic."""
+    import os
+    import tempfile
+    import uuid
+
+    from ..sources.tables import load_events_range
+    from .windows import narrow_shuffle, stage_file
+
+    # one scan of events, materialized tiny, instead of re-scanning the
+    # parquet (with the nanos-ts conversion) once per staged side
+    ev = (
+        load_events_range(spark, sf_dir, lo=lo, hi=hi)
+        .select("event_id", "ts", "user_id", "event_type")
+        .filter(F.col("event_type").isin("click", "purchase"))
+        .localCheckpoint()
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+        F.col("user_id").alias("cu"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("user_id").alias("pu"),
+    )
+
+    stage = tempfile.mkdtemp(prefix=f"hdt_stream_{name}_")
+    out_dir = os.path.join(stage, "_joined")
+    for side in ("clicks", "purchases"):
+        os.makedirs(os.path.join(stage, side))
+    for df, side, fname, mtime in arrivals(clicks, purchases):
+        stage_file(df, os.path.join(stage, side), fname, mtime)
+
+    def side_stream(frame, side: str, ts_col: str):
+        return (
+            spark.readStream.schema(frame.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(stage, side))
+            .withWatermark(ts_col, watermark)
+        )
+
+    joined = side_stream(clicks, "clicks", "click_ts").join(
+        side_stream(purchases, "purchases", "purchase_ts"),
+        (F.col("cu") == F.col("pu"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (
+            F.col("purchase_ts")
+            <= F.col("click_ts") + F.expr("INTERVAL 2 HOURS")
+        ),
+        how,
+    ).select("cu", "click_id", "click_ts", "purchase_id", "purchase_ts")
+
+    with narrow_shuffle(spark, 2):
+        query = (
+            joined.writeStream.format("parquet")
+            .option("path", out_dir)
+            .option(
+                "checkpointLocation", os.path.join(stage, "_checkpoint")
+            )
+            .outputMode("append")
+            .queryName(f"{name}_{uuid.uuid4().hex[:8]}")
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination(timeout_sec)
+    return spark.read.parquet(out_dir)
+
+
 def stream_stream_interval_join(
     spark,
     sf_dir: str,
@@ -611,107 +613,23 @@ def stream_stream_interval_join(
     horizon x arrival rate per side, keyed and shuffled on user_id —
     the interval condition prunes within key groups.
     """
-    import os
-    import tempfile
-    import uuid
-
-    import pyspark.sql.functions as F
-
-    from ..sources.tables import load_events_range
-    from .windows import narrow_shuffle
-
-    # one scan of events, materialized tiny, instead of re-scanning the
-    # parquet (with the nanos-ts conversion) once per staged side
-    ev = (
-        load_events_range(spark, sf_dir, lo=lo, hi=hi)
-        .select("event_id", "ts", "user_id", "event_type")
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .localCheckpoint()
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("user_id").alias("cu"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("user_id").alias("pu"),
-    )
-
-    stage = tempfile.mkdtemp(prefix="hdt_stream_ssj_")
-    cdir = os.path.join(stage, "clicks")
-    pdir = os.path.join(stage, "purchases")
-    out_dir = os.path.join(stage, "_joined")
-    os.makedirs(cdir)
-    os.makedirs(pdir)
-
-    def stage_file(df, dirname: str, name: str, mtime: int) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dest = os.path.join(dirname, name)
-        os.rename(os.path.join(tmp, part), dest)
-        os.utime(dest, (mtime, mtime))
-
     base = 1_700_000_000
-    stage_file(
-        clicks.filter(F.col("click_id") % 2 == 0), cdir,
-        "c1.parquet", base,
-    )
-    stage_file(
-        clicks.filter(F.col("click_id") % 2 == 1), cdir,
-        "c2.parquet", base + 10,
-    )
-    stage_file(
-        purchases.filter(F.col("purchase_id") % 2 == 0), pdir,
-        "p1.parquet", base,
-    )
-    stage_file(
-        purchases.filter(F.col("purchase_id") % 2 == 1), pdir,
-        "p2.parquet", base + 10,
-    )
 
-    cs = (
-        spark.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(cdir)
-        .withWatermark("click_ts", "30 days")
-    )
-    ps = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pdir)
-        .withWatermark("purchase_ts", "30 days")
-    )
-    joined = cs.join(
-        ps,
-        (F.col("cu") == F.col("pu"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 2 HOURS")
-        ),
-    ).select("cu", "click_id", "click_ts", "purchase_id", "purchase_ts")
+    def arrivals(clicks, purchases):
+        out = []
+        sides = ((clicks, "clicks", "c"), (purchases, "purchases", "p"))
+        for frame, side, c in sides:
+            parity = F.col(frame.columns[0]) % 2  # split by event id
+            out += [
+                (frame.filter(parity == 0), side, f"{c}1.parquet", base),
+                (frame.filter(parity == 1), side, f"{c}2.parquet", base + 10),
+            ]
+        return out
 
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark, 2):
-        query = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation", os.path.join(stage, "_checkpoint")
-            )
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_sec)
-    return spark.read.parquet(out_dir)
+    return _click_purchase_join(
+        spark, sf_dir, lo, hi, timeout_sec,
+        name="ssj", watermark="30 days", how="inner", arrivals=arrivals,
+    )
 
 
 def stream_stream_left_outer(
@@ -748,126 +666,33 @@ def stream_stream_left_outer(
     role is played by live traffic; the explicit staging here is what
     makes the semantics testable.
     """
-    import os
-    import tempfile
-    import uuid
-
-    import pyspark.sql.functions as F
-
-    from ..sources.tables import load_events_range
-    from .windows import narrow_shuffle
-
-    # one scan of events, materialized tiny, instead of re-scanning the
-    # parquet (with the nanos-ts conversion) once per staged side
-    ev = (
-        load_events_range(spark, sf_dir, lo=lo, hi=hi)
-        .select("event_id", "ts", "user_id", "event_type")
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .localCheckpoint()
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("user_id").alias("cu"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("user_id").alias("pu"),
-    )
-
-    # advancers via spark.range: a pure-JVM LocalRelation.  The
-    # createDataFrame path spins up Python workers per 1-row frame
-    # (measured ~5 s per staged advancer write on this box).
-    def advancer_clicks(ts: str, eid: int):
-        return spark.range(0, 1, 1, 1).select(
-            F.lit(eid).cast("long").alias("click_id"),
-            F.lit(ts).cast(dict(clicks.dtypes)["click_ts"]).alias("click_ts"),
-            F.lit(999_999_999).cast("long").alias("cu"),
-        )
-
-    def advancer_purchases(ts: str, eid: int):
-        return spark.range(0, 1, 1, 1).select(
-            F.lit(eid).cast("long").alias("purchase_id"),
-            F.lit(ts)
-            .cast(dict(purchases.dtypes)["purchase_ts"])
-            .alias("purchase_ts"),
-            F.lit(999_999_999).cast("long").alias("pu"),
-        )
-
-    stage = tempfile.mkdtemp(prefix="hdt_stream_sslo_")
-    cdir = os.path.join(stage, "clicks")
-    pdir = os.path.join(stage, "purchases")
-    out_dir = os.path.join(stage, "_joined")
-    os.makedirs(cdir)
-    os.makedirs(pdir)
-
-    def stage_file(df, dirname: str, name: str, mtime: int) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dest = os.path.join(dirname, name)
-        os.rename(os.path.join(tmp, part), dest)
-        os.utime(dest, (mtime, mtime))
-
     base = 1_700_000_000
-    stage_file(clicks, cdir, "c1.parquet", base)
-    stage_file(
-        advancer_clicks("2024-06-01 00:00:00", -1), cdir,
-        "c2.parquet", base + 10,
-    )
-    stage_file(
-        advancer_clicks("2024-06-10 00:00:00", -2), cdir,
-        "c3.parquet", base + 20,
-    )
-    stage_file(purchases, pdir, "p1.parquet", base)
-    stage_file(
-        advancer_purchases("2024-06-01 00:00:00", -1), pdir,
-        "p2.parquet", base + 10,
-    )
-    stage_file(
-        advancer_purchases("2024-06-10 00:00:00", -2), pdir,
-        "p3.parquet", base + 20,
-    )
 
-    cs = (
-        spark.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(cdir)
-        .withWatermark("click_ts", "1 hour")
-    )
-    ps = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pdir)
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = cs.join(
-        ps,
-        (F.col("cu") == F.col("pu"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 2 HOURS")
-        ),
-        "left_outer",
-    ).select("cu", "click_id", "click_ts", "purchase_id", "purchase_ts")
-
-    name = f"sslo_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark, 2):
-        query = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation", os.path.join(stage, "_checkpoint")
+    def arrivals(clicks, purchases):
+        # advancers via spark.range: a pure-JVM LocalRelation.  The
+        # createDataFrame path spins up Python workers per 1-row frame
+        # (measured at ~5 s per staged advancer write).
+        def advancer(frame, ts: str, eid: int):
+            id_col, ts_col, user_col = frame.columns
+            return spark.range(0, 1, 1, 1).select(
+                F.lit(eid).cast("long").alias(id_col),
+                F.lit(ts).cast(dict(frame.dtypes)[ts_col]).alias(ts_col),
+                F.lit(999_999_999).cast("long").alias(user_col),
             )
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_sec)
-    return spark.read.parquet(out_dir).filter(F.col("cu") != 999_999_999)
+
+        out = []
+        sides = ((clicks, "clicks", "c"), (purchases, "purchases", "p"))
+        for frame, side, c in sides:
+            out += [
+                (frame, side, f"{c}1.parquet", base),
+                (advancer(frame, "2024-06-01 00:00:00", -1), side,
+                 f"{c}2.parquet", base + 10),
+                (advancer(frame, "2024-06-10 00:00:00", -2), side,
+                 f"{c}3.parquet", base + 20),
+            ]
+        return out
+
+    return _click_purchase_join(
+        spark, sf_dir, lo, hi, timeout_sec,
+        name="sslo", watermark="1 hour", how="left_outer", arrivals=arrivals,
+    ).filter(F.col("cu") != 999_999_999)

@@ -15,6 +15,7 @@ the streaming plan computes the same aggregation.
 from __future__ import annotations
 
 import contextlib
+import os
 import uuid
 
 import pyspark.sql.functions as F
@@ -41,6 +42,30 @@ def normalize_event_ts(stream: DataFrame, col: str = "ts") -> DataFrame:
     if dtype == "timestamp_ntz":
         return stream.withColumn(col, F.col(col).cast("timestamp"))
     return stream
+
+
+def stage_file(
+    df: DataFrame, dest_dir: str, name: str, mtime: float | None = None
+) -> None:
+    """Write ``df`` as ONE plain parquet file ``dest_dir/name`` for a
+    file-source stream to pick up.
+
+    The file stream source lists plain files, not nested dirs: write a
+    single-part parquet dir ``dest_dir/_tmp_<name>`` (the leading
+    underscore hides it from the source), then hoist its part file up.
+    ``mtime`` pins the file's modification time — the source orders
+    arrivals by mtime, and same-second writes tie-break unpredictably.
+    """
+    tmp = os.path.join(dest_dir, "_tmp_" + name)
+    df.coalesce(1).write.parquet(tmp)
+    part = next(
+        f for f in os.listdir(tmp)
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+    dest = os.path.join(dest_dir, name)
+    os.rename(os.path.join(tmp, part), dest)
+    if mtime is not None:
+        os.utime(dest, (mtime, mtime))
 
 
 @contextlib.contextmanager
@@ -362,21 +387,10 @@ def stream_late_data_drop(
     stage = tempfile.mkdtemp(prefix="hdt_stream_late_")
     out_dir = os.path.join(stage, "_windows")
 
-    def stage_file(df, name: str, mtime: float) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(stage, name)
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
     now = _time.time()
-    stage_file(arrival1, "arrival1.parquet", now - 240)
-    stage_file(arrival2, "arrival2.parquet", now - 120)
-    stage_file(arrival3, "arrival3.parquet", now)
+    stage_file(arrival1, stage, "arrival1.parquet", now - 240)
+    stage_file(arrival2, stage, "arrival2.parquet", now - 120)
+    stage_file(arrival3, stage, "arrival3.parquet", now)
 
     stream = (
         spark.readStream.schema(arrival1.schema)

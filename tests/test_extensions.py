@@ -160,23 +160,23 @@ def test_ivf_build_and_search_recall(spark):
 
     from health_data_transformation_spark.operators.similarity import (
         brute_force_top_k,
-        build_ivf_cells,
-        ivf_search,
+        build_ivf_store,
+        ivf_search_stored,
     )
     from health_data_transformation_spark.sources.tables import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     query = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    assigned, cents = build_ivf_cells(e, n_cells=8)
+    assigned, cents = build_ivf_store(e, n_cells=8)
     assert assigned.count() == e.count()  # every vector gets exactly one cell
     assert assigned.select("cell").distinct().count() <= 8
 
     exact = {r["vec_id"] for r in brute_force_top_k(e, query, 10).collect()}
-    got = {r["vec_id"] for r in ivf_search(assigned, cents, query, 10, n_probes=4).collect()}
+    got = {r["vec_id"] for r in ivf_search_stored(assigned, cents, query, 10, n_probes=4).collect()}
     assert len(got & exact) / len(exact) >= 0.8
 
     # deterministic: rebuild gives identical assignment
-    assigned2, _ = build_ivf_cells(e, n_cells=8)
+    assigned2, _ = build_ivf_store(e, n_cells=8)
     a = sorted((r["vec_id"], r["cell"]) for r in assigned.select("vec_id", "cell").collect())
     b = sorted((r["vec_id"], r["cell"]) for r in assigned2.select("vec_id", "cell").collect())
     assert a == b
@@ -184,17 +184,15 @@ def test_ivf_build_and_search_recall(spark):
 
 def test_ivf_store_path_equals_recompute(spark, tmp_path):
     """The persisted IVF index (build_ivf_store + ivf_search_stored) is
-    result-identical to the recompute path (build_ivf_cells +
-    ivf_search) across a parquet round-trip of the store — the q335
-    pin.  Plus the store guards: wrong-frame columns are refused, and
-    n_probes > the store's stamped n_cells fails loudly."""
+    result-identical to probing the same store in memory, across a
+    parquet round-trip of the store — the q335 pin.  Plus the store
+    guards: wrong-frame columns are refused, and n_probes > the
+    store's stamped n_cells fails loudly."""
     import pyspark.sql.functions as F
     import pytest as _pytest
 
     from health_data_transformation_spark.operators.similarity import (
-        build_ivf_cells,
         build_ivf_store,
-        ivf_search,
         ivf_search_stored,
     )
     from health_data_transformation_spark.sources.tables import load_table
@@ -204,9 +202,9 @@ def test_ivf_store_path_equals_recompute(spark, tmp_path):
         F.col("embedding").alias("qv")
     )
 
-    ref_a, ref_c = build_ivf_cells(e, n_cells=8)
+    ref_a, ref_c = build_ivf_store(e, n_cells=8)
     ref = sorted(
-        tuple(r) for r in ivf_search(ref_a, ref_c, query, 10, n_probes=4).collect()
+        tuple(r) for r in ivf_search_stored(ref_a, ref_c, query, 10, n_probes=4).collect()
     )
 
     assigned, cents = build_ivf_store(e, n_cells=8)
@@ -245,7 +243,7 @@ def test_ivf_lloyd_store_roundtrip_and_guards(spark, tmp_path):
     )
     from health_data_transformation_spark.operators.similarity import (
         build_ivf_store_lloyd,
-        ivf_lloyd_search_batch,
+        ivf_search_batch,
     )
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -259,7 +257,7 @@ def test_ivf_lloyd_store_roundtrip_and_guards(spark, tmp_path):
     assert cents.schema["cell"].metadata["hdt_rounds"] == 2
     ref = sorted(
         tuple(r)
-        for r in ivf_lloyd_search_batch(
+        for r in ivf_search_batch(
             assigned, cents, queries, k=3, n_probes=3
         ).collect()
     )
@@ -284,16 +282,16 @@ def test_ivf_lloyd_store_roundtrip_and_guards(spark, tmp_path):
     assert sc.schema["cell"].metadata["hdt_n_cells"] == 8
     got = sorted(
         tuple(r)
-        for r in ivf_lloyd_search_batch(
+        for r in ivf_search_batch(
             sa, sc, queries, k=3, n_probes=3
         ).collect()
     )
     assert got == ref
 
     with _pytest.raises(ValueError, match="build_ivf_store_lloyd"):
-        ivf_lloyd_search_batch(sc, sa, queries, k=3, n_probes=3)
+        ivf_search_batch(sc, sa, queries, k=3, n_probes=3)
     with _pytest.raises(ValueError, match="n_probes"):
-        ivf_lloyd_search_batch(sa, sc, queries, k=3, n_probes=9)
+        ivf_search_batch(sa, sc, queries, k=3, n_probes=9)
 
 
 def test_ivf_batch_search_equals_per_query(spark, tmp_path):

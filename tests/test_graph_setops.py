@@ -133,6 +133,43 @@ def test_prefix_filter_reports_exact_sizes(spark):
     assert len(rows) == 1 and rows[0].inter == 2 and rows[0].un == 4
 
 
+def test_prefix_filter_broadcast_size_guard(spark, tmp_path, monkeypatch):
+    """ADVICE r13: on a coarse scan the verify attaches are broadcast
+    only while the sets side's plan-stats estimate fits the session's
+    spark.sql.autoBroadcastJoinThreshold.  With the estimate patched
+    above it, the plan carries no broadcast hint and the rows equal
+    the unpatched run's."""
+    from health_data_transformation_spark.operators import skew
+    from health_data_transformation_spark.operators.dedup import (
+        prefix_filter_jaccard_pairs,
+    )
+
+    # docs i and i+35 share 3 of 5 tokens (J=0.6); all other pairs 2 of 6
+    docs = [(i, [f"a{i % 5}", f"b{i % 7}", "common", f"u{i}"]) for i in range(40)]
+    p = str(tmp_path / "sets.parquet")
+    spark.createDataFrame(docs, "doc_id LONG, s ARRAY<STRING>").coalesce(
+        1
+    ).write.parquet(p)
+    df = spark.read.parquet(p)
+    assert skew.coarse_scan_width(df) > 0  # the verify-width branch
+
+    def run():
+        out = prefix_filter_jaccard_pairs(df, set_col="s", threshold_pct=50)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return plan, sorted(tuple(r) for r in out.collect())
+
+    plan, rows = run()
+    assert plan.count("strategy=broadcast") == 2
+    assert len(rows) == 5
+
+    conf = spark._jsparkSession.sessionState().conf()
+    over = conf.autoBroadcastJoinThreshold() + 1
+    monkeypatch.setattr(skew, "plan_size_bytes", lambda _df: over)
+    guarded_plan, guarded_rows = run()
+    assert "strategy=broadcast" not in guarded_plan
+    assert guarded_rows == rows
+
+
 def test_custom_datasource_shards_cover_rows_exactly(spark):
     """Shard planning covers [0, rows) exactly once, incl. ragged tail."""
     from health_data_transformation_spark.sources.pydatasource import (

@@ -1322,6 +1322,14 @@ def test_widen_coarse_scan_min_bytes_floor(spark, tmp_path):
         wide._jdf.queryExecution().optimizedPlan().toString()
     )
 
+    # a plan without statistics (RDD-backed) reports
+    # spark.sql.defaultSizeInBytes, a placeholder rather than a size:
+    # the estimate is unknown, so every caller takes its fail-safe branch
+    stats_less = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, "x")]), "id long, text string"
+    )
+    assert plan_size_bytes(stats_less) == -1
+
 
 def test_overlap_actions_order_and_errors(spark):
     """r13: overlap_actions returns results in submission order and

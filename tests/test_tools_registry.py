@@ -599,3 +599,50 @@ def test_git_code_untracked_content_changes_stamp(tmp_path):
     # tracked-diff changes still alter the stamp (pre-existing behavior)
     (repo / "a.py").write_text("x = 2\n")
     assert git_code(str(repo)) not in (stamp_a, stamp_b)
+
+
+def test_package_imports_resolve():
+    """Import-drift guard: every ``from health_data_transformation_spark
+    ... import name`` in the tools, bench.py, the driver entry,
+    perfbench and the tests — imports inside functions included — must
+    name something that still exists.  A tool that imports a removed
+    function otherwise only fails when someone next runs it."""
+    import ast
+    import glob
+    import importlib
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, f) for f in ("bench.py", "__spark_entry__.py")]
+    for pattern in ("tools/*.py", "perfbench/*.py", "tests/*.py"):
+        files += sorted(glob.glob(os.path.join(root, pattern)))
+    pkg = "health_data_transformation_spark"
+    unresolved = []
+    for path in files:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+                names = []
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                mods, names = [node.module or ""], node.names
+            else:
+                continue
+            for mod in mods:
+                if mod != pkg and not mod.startswith(pkg + "."):
+                    continue
+                where = f"{os.path.relpath(path, root)}:{node.lineno}"
+                try:
+                    module = importlib.import_module(mod)
+                except ImportError as exc:
+                    unresolved.append(f"{where} {mod} ({exc})")
+                    continue
+                for alias in names:
+                    if alias.name == "*" or hasattr(module, alias.name):
+                        continue
+                    try:
+                        importlib.import_module(f"{mod}.{alias.name}")
+                    except ImportError:
+                        unresolved.append(f"{where} {mod}.{alias.name}")
+    assert len(files) > 40  # the globs found the tree
+    assert not unresolved, "imports of missing names:\n" + "\n".join(unresolved)

@@ -1308,7 +1308,7 @@ def measure_snapshot_delete2(spark) -> None:
 def measure_ivf_balance(spark) -> None:
     """§8.13b (r11, VERDICT r10 task #7): what Lloyd refinement buys.
 
-    ``build_ivf_cells`` seeds centroids as the n_cells lowest-id
+    ``build_ivf_store`` seeds centroids as the n_cells lowest-id
     vectors — deterministic but arbitrary; cell balance (and therefore
     probe selectivity: the probed fraction of the corpus is the SUM of
     the probed cells' sizes, not n_probes/n_cells) was unmeasured.
@@ -1348,7 +1348,6 @@ def _ivf_balance_one(spark, ds_label: str, path: str) -> None:
     from health_data_transformation_spark.operators.similarity import (
         build_ivf_store,
         build_ivf_store_lloyd,
-        ivf_lloyd_search_batch,
         ivf_search_batch,
     )
 
@@ -1398,13 +1397,9 @@ def _ivf_balance_one(spark, ds_label: str, path: str) -> None:
         mean = sum(sizes) / len(sizes)
         top4 = sum(sizes[-4:])
         t0 = time.time()
-        search = (
-            ivf_search_batch(assigned, cents, anchors, k=3, n_probes=4)
-            if rounds is None
-            else ivf_lloyd_search_batch(
-                assigned, cents, anchors, k=3, n_probes=4
-            )
-        )
+        # one probe for both arms: the store's centroid columns pick
+        # the cell metric (cosine for the seed store, d2 for Lloyd)
+        search = ivf_search_batch(assigned, cents, anchors, k=3, n_probes=4)
         got = search.select("query_id", F.col("vec_id").alias("nid"))
         n_hit = exact.join(got, ["query_id", "nid"]).count()
         probe_wall = time.time() - t0
@@ -1435,8 +1430,9 @@ def measure_ivf_store(spark) -> None:
       * query load: 3 query vectors (base ids 0/1/2), each searched
         top-10 with n_probes=4 of 16 cells;
       * arms, results asserted identical per query:
-        (a) rebuild — build_ivf_cells + ivf_search per query (the
-            pre-r10 q73 shape when served repeatedly);
+        (a) rebuild — build_ivf_store + ivf_search_stored on the
+            in-memory store, per query (the pre-r10 q73 shape when
+            served repeatedly);
         (b) stored — ivf_search_stored against the parquet index.
 
     Store build wall and size are reported separately — paid once per
@@ -1447,9 +1443,7 @@ def measure_ivf_store(spark) -> None:
     """
     sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators.similarity import (
-        build_ivf_cells,
         build_ivf_store,
-        ivf_search,
         ivf_search_stored,
     )
 
@@ -1510,9 +1504,10 @@ def measure_ivf_store(spark) -> None:
                 .alias("qv")
             )
             t0 = time.time()
-            ra, rc = build_ivf_cells(corpus, n_cells=16)
+            ra, rc = build_ivf_store(corpus, n_cells=16)
             got_rebuild = sorted(
-                tuple(r) for r in ivf_search(ra, rc, qdf, 10, n_probes=4).collect()
+                tuple(r)
+                for r in ivf_search_stored(ra, rc, qdf, 10, n_probes=4).collect()
             )
             walls["rebuild"] += time.time() - t0
             t0 = time.time()
