@@ -772,7 +772,10 @@ def prefix_filter_jaccard_pairs(
     # forced broadcast is also gated on the sets side's plan-stats
     # estimate fitting the session's own autoBroadcastJoinThreshold;
     # an unknown estimate (-1) or a larger one keeps the id-only
-    # repartition but attaches with the plain joins.
+    # repartition but attaches with the plain joins.  The estimate is
+    # read off ``df``, whose plan the coarse-scan probe has already
+    # optimized (``sets`` would pay a fresh optimizer pass); ``sets``
+    # projects ``df``, so ``df``'s estimate is never the smaller one.
     from .skew import coarse_scan_width, plan_size_bytes
 
     attach_a = sets.select(
@@ -787,8 +790,8 @@ def prefix_filter_jaccard_pairs(
         # keyless repartition(n) would pay a local sort of its input
         # (spark.sql.execution.sortBeforeRepartition) for nothing
         cand = cand.repartition(verify_width, F.col("id_a"), F.col("id_b"))
-        conf = sets.sparkSession._jsparkSession.sessionState().conf()
-        if 0 <= plan_size_bytes(sets) <= conf.autoBroadcastJoinThreshold():
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        if 0 <= plan_size_bytes(df) <= conf.autoBroadcastJoinThreshold():
             attach_a, attach_b = F.broadcast(attach_a), F.broadcast(attach_b)
     paired = cand.join(attach_a, "id_a").join(attach_b, "id_b")
     verified = paired.select(

@@ -307,7 +307,7 @@ def _scored_cells(
     else:
         builder, need = "build_ivf_store", {"cell", "_centroid", "_cnorm"}
     for frame, cols, name in (
-        (assigned, {"cell", vec_col, id_col}, "assigned"),
+        (assigned, {"cell", "_vnorm", vec_col, id_col}, "assigned"),
         (centroids, need, "centroids"),
     ):
         missing = cols - set(frame.columns)
@@ -340,14 +340,13 @@ def _scored_cells(
     return cq.withColumn("_qs", score), [F.desc("_qs"), F.asc("cell")]
 
 
-def _floored_sim(assigned: DataFrame, vec_col: str, query_col: str) -> Column:
+def _floored_sim(vec_col: str, query_col: str) -> Column:
     """The exact floored cosine every IVF probe verifies with (the
     brute_force_top_k/cosine_scores expression), reading the store's
-    precomputed ``_vnorm`` when present instead of re-folding norms."""
-    vnorm = (
-        F.col("_vnorm") if "_vnorm" in assigned.columns else norm(F.col(vec_col))
+    precomputed ``_vnorm`` instead of re-folding norms."""
+    sim = dot(F.col(vec_col), F.col(query_col)) / (
+        F.col("_vnorm") * F.col("_qnorm")
     )
-    sim = dot(F.col(vec_col), F.col(query_col)) / (vnorm * F.col("_qnorm"))
     quant = F.lit(float(10 ** 6))
     return F.floor(sim * quant) / quant
 
@@ -386,7 +385,7 @@ def ivf_search_stored(
     filtered = assigned.filter(F.col("cell").isin(probes))
     return (
         filtered.crossJoin(F.broadcast(q))
-        .withColumn("sim", _floored_sim(assigned, vec_col, query_col))
+        .withColumn("sim", _floored_sim(vec_col, query_col))
         .select(F.col(id_col), F.col("sim"))
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
@@ -450,7 +449,7 @@ def ivf_search_batch(
     )
     cands = (
         assigned.join(F.broadcast(probes), "cell")
-        .withColumn("sim", _floored_sim(assigned, vec_col, query_col))
+        .withColumn("sim", _floored_sim(vec_col, query_col))
         .select(query_id_col, F.col(id_col), F.col("sim"))
     )
     return top_k_per_group_scalable(

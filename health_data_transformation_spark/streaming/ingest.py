@@ -23,6 +23,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from ..catalog import Warehouse
 from ..ingest import LoadReport, load_hhs_frame, load_quality_frame
+from ..operators import dedup
 from ..schemas import CMS_RAW_SCHEMA, HHS_RAW_SCHEMA
 
 #: file-source streams require a declared schema; CSV schema matches by
@@ -122,6 +123,7 @@ class _Admission(NamedTuple):
     """One streaming admission gate: which table streams in, how its
     corpus store is built and persisted, and how an arrival probes it."""
 
+    name: str  # stage-dir prefix and stream query name
     table: str
     id_col: str
     value_col: str
@@ -131,40 +133,37 @@ class _Admission(NamedTuple):
     probe: Callable  # (buckets, payload, arrival) -> verdicts
 
 
-def _admission(kind: str) -> _Admission:
-    """The q181 (``text``) and q338 (``vector``) gates.  Both caps are
-    derived corpus-side at build time (``cap_budget``) and stamped in
-    the store's footer metadata; the probes read the stamp by default
-    (``max_bucket=STORED``), so admission is batch-independent with no
-    constant here (VERDICT r10 wrong #3: the previous hard-coded
-    max_bucket=50 fails OPEN as corpus buckets outgrow it — §8.11b /
-    §8.11c — and a per-microbatch pair_budget would make admission
-    depend on the arrival split)."""
-    from ..operators import dedup
-
-    if kind == "text":
-        return _Admission(
-            "documents", "doc_id", "text", "bucket", "_store_tokens",
-            lambda corpus: dedup.build_lsh_store(
-                corpus, band_size=4, num_hashes=8,
-                cap_budget=dedup.ADMISSION_CAP_BUDGET,
-            ),
-            lambda sb, sp, bdf: dedup.lsh_incremental_matches_stored(
-                sb, sp, bdf, band_size=4, num_hashes=8, min_jaccard=0.4,
-            ),
-        )
-    return _Admission(
-        "embeddings", "vec_id", "embedding", "lsh_sig", "_store_vectors",
-        lambda corpus: dedup.build_embedding_lsh_store(
-            corpus, cap_budget=dedup.ADMISSION_CAP_BUDGET
-        ),
-        lambda sb, sp, bdf: dedup.embedding_incremental_matches_stored(
-            sb, sp, bdf, min_cosine=0.3,
-        ),
-    )
+# The q181 (text) and q338 (vector) gates.  Both caps are derived
+# corpus-side at build time (``cap_budget``) and stamped in the store's
+# footer metadata; the probes read the stamp by default
+# (``max_bucket=STORED``), so admission is batch-independent with no
+# constant here (VERDICT r10 wrong #3: the previous hard-coded
+# max_bucket=50 fails OPEN as corpus buckets outgrow it — §8.11b /
+# §8.11c — and a per-microbatch pair_budget would make admission depend
+# on the arrival split).
+_TEXT_GATE = _Admission(
+    "text", "documents", "doc_id", "text", "bucket", "_store_tokens",
+    lambda corpus: dedup.build_lsh_store(
+        corpus, band_size=4, num_hashes=8,
+        cap_budget=dedup.ADMISSION_CAP_BUDGET,
+    ),
+    lambda sb, sp, bdf: dedup.lsh_incremental_matches_stored(
+        sb, sp, bdf, band_size=4, num_hashes=8, min_jaccard=0.4,
+    ),
+)
+_VECTOR_GATE = _Admission(
+    "vector", "embeddings", "vec_id", "embedding", "lsh_sig",
+    "_store_vectors",
+    lambda corpus: dedup.build_embedding_lsh_store(
+        corpus, cap_budget=dedup.ADMISSION_CAP_BUDGET
+    ),
+    lambda sb, sp, bdf: dedup.embedding_incremental_matches_stored(
+        sb, sp, bdf, min_cosine=0.3,
+    ),
+)
 
 
-def _build_admission_store(spark, sf_dir: str, dest: str, kind: str) -> str:
+def _build_admission_store(spark, sf_dir: str, dest: str, a: _Admission) -> str:
     """Persist the stored corpus (id % 7 != 3) of an admission gate
     under ``dest``: the signature buckets sorted on their key and the
     verification table sorted on ``id_c``, so probe IN filters prune
@@ -174,7 +173,6 @@ def _build_admission_store(spark, sf_dir: str, dest: str, kind: str) -> str:
     from ..functions.actions import overlap_actions
     from ..sources.tables import load_table
 
-    a = _admission(kind)
     d = load_table(spark, sf_dir, a.table).select(a.id_col, a.value_col)
     buckets, payload = a.build(d.filter(~(F.col(a.id_col) % 7 == 3)))
     overlap_actions([  # independent writes overlapped (guide §2.6, r13)
@@ -187,7 +185,7 @@ def _build_admission_store(spark, sf_dir: str, dest: str, kind: str) -> str:
 
 
 def _admission_stream(
-    spark, sf_dir: str, timeout_sec: int, store_dir: str | None, kind: str
+    spark, sf_dir: str, timeout_sec: int, store_dir: str | None, a: _Admission
 ):
     """The one body of the two streaming admission gates: the batch
     rows (id % 7 = 3) arrive as TWO microbatch files (split by id
@@ -201,11 +199,10 @@ def _admission_stream(
     from ..sources.tables import load_table
     from .windows import stage_file
 
-    a = _admission(kind)
     d = load_table(spark, sf_dir, a.table).select(a.id_col, a.value_col)
     batch = d.filter(F.col(a.id_col) % 7 == 3)
 
-    stage = tempfile.mkdtemp(prefix=f"hdt_stream_{kind}_")
+    stage = tempfile.mkdtemp(prefix=f"hdt_stream_{a.name}_")
     out_dir = os.path.join(stage, "_verdicts")
     # the corpus's probe-side index, persisted ONCE before any arrival
     # (at 100 TB this is the stored corpus's own ingest-time signature
@@ -216,7 +213,7 @@ def _admission_stream(
     # differentials gate end to end.
     if store_dir is None:
         store_dir = stage
-        _build_admission_store(spark, sf_dir, store_dir, kind)
+        _build_admission_store(spark, sf_dir, store_dir, a)
     sb = spark.read.parquet(os.path.join(store_dir, "_store_buckets"))
     sp = spark.read.parquet(os.path.join(store_dir, a.payload_dir))
 
@@ -244,7 +241,7 @@ def _admission_stream(
     # keep the cap, which is what it exists for.
     query = (
         stream.writeStream.foreachBatch(admit)
-        .queryName(f"{kind}_admission_{uuid.uuid4().hex[:8]}")
+        .queryName(f"{a.name}_admission_{uuid.uuid4().hex[:8]}")
         .option(
             "checkpointLocation", os.path.join(stage, "_checkpoint")
         )
@@ -261,14 +258,14 @@ def build_text_store(spark, sf_dir: str, dest: str) -> str:
     sorted on the probe keys, admission cap derived corpus-side and
     stamped.  Split out so bench.py's store_split can time build and
     stream separately (VERDICT r10 task #5)."""
-    return _build_admission_store(spark, sf_dir, dest, "text")
+    return _build_admission_store(spark, sf_dir, dest, _TEXT_GATE)
 
 
 def build_vector_store(spark, sf_dir: str, dest: str) -> str:
     """q338's one-time store build — :func:`build_text_store` for the
     vector gate (signature buckets + vectors with precomputed norms,
     derived admission cap stamped)."""
-    return _build_admission_store(spark, sf_dir, dest, "vector")
+    return _build_admission_store(spark, sf_dir, dest, _VECTOR_GATE)
 
 
 def stream_incremental_dedup(
@@ -300,7 +297,7 @@ def stream_incremental_dedup(
     remove).  Results are knob-for-knob identical to the recompute
     path (test_lsh_store_path_equals_recompute).
     """
-    return _admission_stream(spark, sf_dir, timeout_sec, store_dir, "text")
+    return _admission_stream(spark, sf_dir, timeout_sec, store_dir, _TEXT_GATE)
 
 
 def stream_embedding_admission(
@@ -326,7 +323,7 @@ def stream_embedding_admission(
     statement with the derived-cap CTEs swapped in) verifies that end
     to end.
     """
-    return _admission_stream(spark, sf_dir, timeout_sec, store_dir, "vector")
+    return _admission_stream(spark, sf_dir, timeout_sec, store_dir, _VECTOR_GATE)
 
 
 def stream_static_enrich(
@@ -510,15 +507,19 @@ def _click_purchase_join(
     name: str,
     watermark: str,
     how: str,
-    arrivals: Callable,
+    advancers: tuple[str, ...] = (),
 ):
     """The one body of the stream-stream interval joins (q238 inner,
     q244 left outer): each click joins the same user's purchases inside
     [click_ts, click_ts + 2h], both sides from their own watermarked
-    file source, appended to a parquet sink.  ``arrivals(clicks,
-    purchases)`` lists the staged microbatch files as (frame,
-    ``"clicks"``/``"purchases"``, file name, mtime); the pinned mtimes
-    make the arrival order deterministic."""
+    file source, appended to a parquet sink.
+
+    Without ``advancers`` each side arrives as two microbatch files
+    split by event-id parity.  With them each side arrives whole in one
+    file, then one file per advancer timestamp holding a single
+    sentinel-user row that pushes the watermark forward; sentinel rows
+    are dropped from the result.  File mtimes are pinned 10 s apart, so
+    the arrival order is deterministic."""
     import os
     import tempfile
     import uuid
@@ -547,10 +548,34 @@ def _click_purchase_join(
 
     stage = tempfile.mkdtemp(prefix=f"hdt_stream_{name}_")
     out_dir = os.path.join(stage, "_joined")
-    for side in ("clicks", "purchases"):
+    sentinel = 999_999_999
+    base = 1_700_000_000
+    sides = (
+        (clicks, "clicks", "c", "click_id", "click_ts", "cu"),
+        (purchases, "purchases", "p", "purchase_id", "purchase_ts", "pu"),
+    )
+    for frame, side, c, id_col, ts_col, user_col in sides:
+        if advancers:
+            # advancers via spark.range: a pure-JVM LocalRelation.  The
+            # createDataFrame path spins up Python workers per 1-row
+            # frame (measured at ~5 s per staged advancer write).
+            ts_type = dict(frame.dtypes)[ts_col]
+            files = [frame] + [
+                spark.range(0, 1, 1, 1).select(
+                    F.lit(-i).cast("long").alias(id_col),
+                    F.lit(ts).cast(ts_type).alias(ts_col),
+                    F.lit(sentinel).cast("long").alias(user_col),
+                )
+                for i, ts in enumerate(advancers, 1)
+            ]
+        else:
+            files = [frame.filter(F.col(id_col) % 2 == p) for p in (0, 1)]
         os.makedirs(os.path.join(stage, side))
-    for df, side, fname, mtime in arrivals(clicks, purchases):
-        stage_file(df, os.path.join(stage, side), fname, mtime)
+        for i, df in enumerate(files):
+            stage_file(
+                df, os.path.join(stage, side), f"{c}{i + 1}.parquet",
+                base + 10 * i,
+            )
 
     def side_stream(frame, side: str, ts_col: str):
         return (
@@ -584,7 +609,8 @@ def _click_purchase_join(
             .start()
         )
         query.awaitTermination(timeout_sec)
-    return spark.read.parquet(out_dir)
+    joined = spark.read.parquet(out_dir)
+    return joined.filter(F.col("cu") != sentinel) if advancers else joined
 
 
 def stream_stream_interval_join(
@@ -613,22 +639,9 @@ def stream_stream_interval_join(
     horizon x arrival rate per side, keyed and shuffled on user_id —
     the interval condition prunes within key groups.
     """
-    base = 1_700_000_000
-
-    def arrivals(clicks, purchases):
-        out = []
-        sides = ((clicks, "clicks", "c"), (purchases, "purchases", "p"))
-        for frame, side, c in sides:
-            parity = F.col(frame.columns[0]) % 2  # split by event id
-            out += [
-                (frame.filter(parity == 0), side, f"{c}1.parquet", base),
-                (frame.filter(parity == 1), side, f"{c}2.parquet", base + 10),
-            ]
-        return out
-
     return _click_purchase_join(
         spark, sf_dir, lo, hi, timeout_sec,
-        name="ssj", watermark="30 days", how="inner", arrivals=arrivals,
+        name="ssj", watermark="30 days", how="inner",
     )
 
 
@@ -666,33 +679,8 @@ def stream_stream_left_outer(
     role is played by live traffic; the explicit staging here is what
     makes the semantics testable.
     """
-    base = 1_700_000_000
-
-    def arrivals(clicks, purchases):
-        # advancers via spark.range: a pure-JVM LocalRelation.  The
-        # createDataFrame path spins up Python workers per 1-row frame
-        # (measured at ~5 s per staged advancer write).
-        def advancer(frame, ts: str, eid: int):
-            id_col, ts_col, user_col = frame.columns
-            return spark.range(0, 1, 1, 1).select(
-                F.lit(eid).cast("long").alias(id_col),
-                F.lit(ts).cast(dict(frame.dtypes)[ts_col]).alias(ts_col),
-                F.lit(999_999_999).cast("long").alias(user_col),
-            )
-
-        out = []
-        sides = ((clicks, "clicks", "c"), (purchases, "purchases", "p"))
-        for frame, side, c in sides:
-            out += [
-                (frame, side, f"{c}1.parquet", base),
-                (advancer(frame, "2024-06-01 00:00:00", -1), side,
-                 f"{c}2.parquet", base + 10),
-                (advancer(frame, "2024-06-10 00:00:00", -2), side,
-                 f"{c}3.parquet", base + 20),
-            ]
-        return out
-
     return _click_purchase_join(
         spark, sf_dir, lo, hi, timeout_sec,
-        name="sslo", watermark="1 hour", how="left_outer", arrivals=arrivals,
-    ).filter(F.col("cu") != 999_999_999)
+        name="sslo", watermark="1 hour", how="left_outer",
+        advancers=("2024-06-01 00:00:00", "2024-06-10 00:00:00"),
+    )

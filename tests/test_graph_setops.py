@@ -135,8 +135,8 @@ def test_prefix_filter_reports_exact_sizes(spark):
 
 def test_prefix_filter_broadcast_size_guard(spark, tmp_path, monkeypatch):
     """ADVICE r13: on a coarse scan the verify attaches are broadcast
-    only while the sets side's plan-stats estimate fits the session's
-    spark.sql.autoBroadcastJoinThreshold.  With the estimate patched
+    only while the input's plan-stats estimate (never below the sets
+    side's) fits the session's spark.sql.autoBroadcastJoinThreshold.  With the estimate patched
     above it, the plan carries no broadcast hint and the rows equal
     the unpatched run's."""
     from health_data_transformation_spark.operators import skew
