@@ -40,6 +40,7 @@ from collections.abc import Callable, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .functions.actions import observed_pass
 from .schemas import TABLE_KEYS, TABLE_PARTITIONS, TABLE_SCHEMAS
 from .snapshots import SnapshotTable, tuples_filter
 
@@ -130,7 +131,14 @@ class Warehouse:
     ) -> int:
         """First-wins upsert (D4): insert rows whose key is absent.
 
-        The existing side is pruned to the key columns.  Returns the
+        The existing side is pruned to the key columns but not to the
+        batch's partitions: it reads the keys of every partition.  The
+        fresh rows are deduplicated per key within the batch too, then
+        held in a lazy local checkpoint that one observed ``noop`` pass
+        fills and counts (one job, where ``count()`` took two); the
+        partition-key probe and the write read the checkpoint's blocks,
+        so the anti-join runs once.  A batch whose rows all exist
+        already writes nothing and publishes no version.  Returns the
         number of rows appended.
         """
         keys = list(keys or TABLE_KEYS[table])
@@ -141,11 +149,9 @@ class Warehouse:
             # no-op the optimizer cannot prove (the empty frame is an
             # RDD scan, not a LocalRelation) — skip the join outright
             fresh = df
-        # one deterministic winner per key *within* the batch as well;
-        # the lazy checkpoint runs the anti-join once, in the count, and
-        # the partition-key probe and the write read its blocks
+        # one deterministic winner per key *within* the batch as well
         fresh = fresh.dropDuplicates(keys).localCheckpoint(eager=False)
-        n = fresh.count()
+        n = observed_pass(fresh, n=F.count(F.lit(1)))["n"]
         if n:
             self.append(fresh, table)
         return n

@@ -10,12 +10,19 @@ Engine lifecycle: one declarative plan per target table —
   dedup (deterministic first-wins) -> anti-join vs target ->
   partitioned append + quarantine + load report.
 No driver-side loops; the whole load is a handful of Spark jobs whose
-shuffle structure is independent of row count (the anti-join probe is
-the only join, pruned to the batch's partitions/keys).
+shuffle structure is independent of row count.  The anti-join probe is
+the only join; its existing side is pruned to the key columns but
+reads every partition's keys, not only the batch's.  The load counts
+come out of observed passes (validate.split_valid_cached,
+Warehouse.append_idempotent), not separate count jobs, and a load's
+table writes are independent — each table commits its own manifest —
+so they are submitted together (functions.actions.overlap_actions) and
+run as one wave of jobs.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import time
 from dataclasses import dataclass, field
@@ -24,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 from .catalog import Warehouse
+from .functions.actions import overlap_actions
 from .operators import cleaning, validate
 from .schemas import BED_METRIC_COLS, HHS_SENTINEL
 from .sources.csv import read_cms_csv, read_hhs_csv
@@ -87,32 +95,25 @@ def load_hhs_frame(raw, warehouse: Warehouse) -> LoadReport:
         input_rows=counts["input_rows"], invalid_rows=counts["invalid_rows"]
     )
 
-    hospitals = valid.select("hospital_pk", "hospital_name")
-    locations = valid.select(
-        F.col("hospital_pk").alias("hospital_fk"),
-        "state", "address", "city", "zip", "fips_code", "geocoded_hospital_address",
-    )
-    beds = valid.select(
-        F.col("hospital_pk").alias("hospital_fk"), "collection_week", *BED_METRIC_COLS
-    )
-
-    report.table_rows_added["hospitals"] = warehouse.append_idempotent(
-        hospitals, "hospitals"
-    )
-    report.table_rows_added["hospital_locations"] = warehouse.append_idempotent(
-        locations, "hospital_locations"
-    )
-    report.table_rows_added["hospital_bed_information"] = warehouse.append_idempotent(
-        beds, "hospital_bed_information"
+    targets = {
+        "hospitals": valid.select("hospital_pk", "hospital_name"),
+        "hospital_locations": valid.select(
+            F.col("hospital_pk").alias("hospital_fk"),
+            "state", "address", "city", "zip", "fips_code",
+            "geocoded_hospital_address",
+        ),
+        "hospital_bed_information": valid.select(
+            F.col("hospital_pk").alias("hospital_fk"), "collection_week",
+            *BED_METRIC_COLS,
+        ),
+    }
+    report.table_rows_added = _write_load(
+        warehouse, targets, report, invalid, flagged, "hhs"
     )
     report.duplicate_rows = (
         report.input_rows - report.invalid_rows
         - report.table_rows_added["hospital_bed_information"]
     )
-
-    if report.invalid_rows:
-        warehouse.quarantine(invalid, "hhs")
-    flagged.unpersist()
     report.seconds = time.time() - t0
     return report.log("hhs")
 
@@ -161,18 +162,43 @@ def load_quality_frame(raw, warehouse: Warehouse) -> LoadReport:
     report = LoadReport(
         input_rows=counts["input_rows"], invalid_rows=counts["invalid_rows"]
     )
-    added = warehouse.append_idempotent(
-        valid.select(
+    targets = {
+        "hospital_quality_information": valid.select(
             "facility_id", "hospital_type", "hospital_ownership",
             "emergency_services", "hospital_overall_rating", "data_date",
         ),
-        "hospital_quality_information",
+    }
+    report.table_rows_added = _write_load(
+        warehouse, targets, report, invalid, flagged, "quality"
     )
-    report.table_rows_added["hospital_quality_information"] = added
-    report.duplicate_rows = report.input_rows - report.invalid_rows - added
-
-    if report.invalid_rows:
-        warehouse.quarantine(invalid, "quality")
-    flagged.unpersist()
+    report.duplicate_rows = (
+        report.input_rows - report.invalid_rows
+        - report.table_rows_added["hospital_quality_information"]
+    )
     report.seconds = time.time() - t0
     return report.log("quality")
+
+
+def _write_load(
+    warehouse: Warehouse, targets: dict, report: LoadReport,
+    invalid, flagged, source: str,
+) -> dict[str, int]:
+    """One wave of writes: every target's idempotent append, plus the
+    quarantine write when the batch has invalid rows, submitted
+    together.  They share only the cached ``flagged`` input, which is
+    unpersisted once all of them have finished.  When one write
+    fails, the others still commit; re-running the load adds only the
+    missing rows, and writes the quarantine rows again, as
+    re-delivering a file does.  Returns rows added per table, in
+    ``targets`` order."""
+    thunks = [
+        functools.partial(warehouse.append_idempotent, df, table)
+        for table, df in targets.items()
+    ]
+    if report.invalid_rows:
+        thunks.append(functools.partial(warehouse.quarantine, invalid, source))
+    try:
+        added = overlap_actions(thunks, max_workers=len(thunks))
+    finally:
+        flagged.unpersist()
+    return dict(zip(targets, added))

@@ -14,10 +14,12 @@ NULL semantics follow the reference: NULL *passes* a bound check (the
 as ``isNull() | predicate``.
 
 Scale note: `split_valid` is one scan evaluated lazily per consumer;
-`split_valid_cached` is the loaders' path — a single cached
-materialization feeds the valid/invalid splits AND the load-report
-counts, so the input is read exactly once.  Predicates are codegen'd
-and pushed down.
+`split_valid_cached` is the loaders' path.  It caches the row-flagged
+input and fills that cache with one observed pass (a ``noop`` write
+carrying the count aggregates as an ``Observation``): one job, no
+shuffle, and the load-report counts come out of the same scan.  Every
+later consumer reads the cached copy, so the input is read exactly
+once.  Predicates are codegen'd and pushed down.
 """
 
 from __future__ import annotations
@@ -29,6 +31,8 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from ..functions.actions import observed_pass
 
 
 @dataclass
@@ -91,50 +95,30 @@ def split_valid_cached(
     """``split_valid`` with single-materialization economics.
 
     Marks each row with the combined predicate, caches the *flagged*
-    frame, and computes (input_rows, invalid_rows) with one aggregate
-    over that cache — so the input is scanned exactly ONCE regardless
-    of how many consumers follow (the three per-table appends, the
-    quarantine write, and the counts all read the same materialized
-    copy).  The previous pattern (`raw.count()` + `invalid.count()` +
-    the valid-side cache fill) cost three input scans per load — the
-    difference between 1x and 3x the ingest bytes at 100 TB.
+    frame, and fills the cache with one observed pass: a ``noop`` write
+    over the cached frame that carries (input_rows, invalid_rows) as an
+    ``Observation``.  That pass is one job with no shuffle; an
+    aggregate ``first()`` over the cache cost three (the cache fill,
+    the partial-aggregate stage and the final one).  Every later
+    consumer (the per-table appends and the quarantine write) reads
+    the same materialized copy, so the input is scanned exactly ONCE.
 
     Returns (valid, invalid, flagged, counts); the caller unpersists
     ``flagged`` when done.
     """
-    if not rules:
-        valid, invalid = split_valid(df, rules)
-        flagged = df.cache()
-        return valid, invalid, flagged, {
-            "input_rows": flagged.count(), "invalid_rows": 0,
-        }
-    combined = reduce(and_, (r.as_column() for r in rules))
+    combined = reduce(and_, (r.as_column() for r in rules), F.lit(True))
     flagged = df.withColumn("_ok", combined).cache()
+    counts = observed_pass(
+        flagged,
+        input_rows=F.count(F.lit(1)),
+        invalid_rows=F.count_if(~F.col("_ok")),
+    )
     failed = F.filter(
         F.array(*[F.when(~r.as_column(), F.lit(r.name)) for r in rules]),
         lambda x: x.isNotNull(),
-    )
+    ).cast("array<string>")
     valid = flagged.filter(F.col("_ok")).drop("_ok")
     invalid = flagged.filter(~F.col("_ok")).drop("_ok").withColumn(
         "_failed_rules", failed
     )
-    counts_row = flagged.agg(
-        F.count(F.lit(1)).alias("input_rows"),
-        F.sum(F.when(~F.col("_ok"), 1).otherwise(0)).alias("invalid_rows"),
-    ).first()
-    counts = {
-        "input_rows": int(counts_row["input_rows"]),
-        "invalid_rows": int(counts_row["invalid_rows"] or 0),
-    }
     return valid, invalid, flagged, counts
-
-
-def validation_report(valid: DataFrame, invalid: DataFrame) -> dict:
-    """Load-report counts (reference prints these at load_hhs.py:157-161)."""
-    n_valid = valid.count()
-    n_invalid = invalid.count()
-    return {
-        "valid": n_valid,
-        "invalid": n_invalid,
-        "total": n_valid + n_invalid,
-    }

@@ -276,7 +276,7 @@ class SnapshotTable:
           r12-review catch; Delta raises ConcurrentAppendException
           for exactly this delete-vs-append shape).  The rebase
           therefore re-checks the predicate (``read_scope_matches``,
-          a bounded limit(1) probe) against ONLY the winner's changed
+          a bounded isEmpty() probe) against ONLY the winner's changed
           directories: no matches -> safe graft; any match ->
           SnapshotConflict and the caller re-runs with fresh
           discovery.
@@ -390,7 +390,7 @@ class SnapshotTable:
         # too: it is the manifest key separator (a single-level key is
         # never split, and the hive path escapes '/' as %2F, so legacy
         # single-column stores with such values stay writable).
-        # limit(1) bounds the probe (early-exit on the first bad row).
+        # isEmpty() bounds the probe (early exit on the first bad row).
         def bad(c):
             cond = _F.col(c).isNull() | (_F.col(c).cast("string") == "")
             if len(pcols) > 1:
@@ -409,8 +409,8 @@ class SnapshotTable:
         # column-pruned probe (r13): only the partition columns are
         # inspected, so the scan reads just those columns
         bad_cond = functools.reduce(operator.or_, (bad(c) for c in pcols))
-        if not values_prevalidated and (
-            df.select(*pcols).filter(bad_cond).limit(1).count()
+        if not values_prevalidated and not (
+            df.select(*pcols).filter(bad_cond).isEmpty()
         ):
             raise ValueError(
                 f"NULL, empty-string, or '/'-containing values in "
@@ -757,18 +757,12 @@ class SnapshotTable:
             def _matches_in(dirs: list[str], tbl_schema) -> bool:
                 # bounded read-scope probe for the delete rebase: scan
                 # ONLY the winner's changed directories for predicate
-                # matches (pushdown + limit(1) — early exit on the
+                # matches (pushdown + isEmpty() — early exit on the
                 # first hit)
                 reader = self.spark.read
                 if tbl_schema is not None:
                     reader = reader.schema(tbl_schema)
-                return (
-                    reader.parquet(*dirs)
-                    .filter(matches)
-                    .limit(1)
-                    .count()
-                    > 0
-                )
+                return not reader.parquet(*dirs).filter(matches).isEmpty()
 
             return self._publish_scoped(
                 v, "delete", schema if schema else current.schema,

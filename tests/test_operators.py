@@ -1332,9 +1332,12 @@ def test_widen_coarse_scan_min_bytes_floor(spark, tmp_path):
 
 
 def test_overlap_actions_order_and_errors(spark):
-    """r13: overlap_actions returns results in submission order and
-    propagates the first exception — identical failure semantics to
-    the sequential form it replaces."""
+    """overlap_actions returns results in submission order.  When a
+    thunk raises, its siblings still run to completion, and the first
+    exception is re-raised only once all of them have finished."""
+    import threading
+    import time
+
     import pytest as _pytest
 
     from health_data_transformation_spark.functions.actions import (
@@ -1343,7 +1346,42 @@ def test_overlap_actions_order_and_errors(spark):
 
     out = overlap_actions([lambda: 1, lambda: 2, lambda: 3])
     assert out == [1, 2, 3]
+
+    done = threading.Event()
+
+    def boom():
+        raise RuntimeError("boom")
+
+    def slow_sibling():
+        time.sleep(0.5)
+        done.set()
+
     with _pytest.raises(RuntimeError, match="boom"):
-        overlap_actions(
-            [lambda: 1, lambda: (_ for _ in ()).throw(RuntimeError("boom"))]
-        )
+        overlap_actions([boom, slow_sibling])
+    # set before the raise reached the caller: nothing was cancelled
+    assert done.is_set()
+
+
+def test_overlap_actions_inherit_local_properties(spark):
+    """Every thunk runs with the caller's Spark local properties: the
+    job description and scheduler pool set by the caller reach the
+    jobs a pool thread submits."""
+    from health_data_transformation_spark.functions.actions import (
+        overlap_actions,
+    )
+
+    sc = spark.sparkContext
+    sc.setJobDescription("overlap-probe")
+    sc.setLocalProperty("spark.scheduler.pool", "overlap-pool")
+    try:
+        def read_back():
+            return (
+                sc.getLocalProperty("spark.job.description"),
+                sc.getLocalProperty("spark.scheduler.pool"),
+            )
+
+        got = overlap_actions([read_back] * 3, max_workers=3)
+    finally:
+        sc.setJobDescription(None)
+        sc.setLocalProperty("spark.scheduler.pool", None)
+    assert got == [("overlap-probe", "overlap-pool")] * 3

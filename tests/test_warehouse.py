@@ -1,5 +1,7 @@
 """Warehouse failure modes (ROADMAP aim 3): a crash between a data write
-and its commit, and two overwrites running at once in one session."""
+and its commit, two overwrites running at once in one session, a load
+whose overlapped table writes fail part-way, and the report and job
+count of one load."""
 
 from __future__ import annotations
 
@@ -10,10 +12,11 @@ import pyspark.sql.functions as F
 import pytest
 
 from health_data_transformation_spark.catalog import Warehouse
-from health_data_transformation_spark.ingest import load_hhs
+from health_data_transformation_spark.ingest import load_hhs, load_quality
 from health_data_transformation_spark.snapshots import SnapshotTable
 
 BEDS = "hospital_bed_information"
+TABLES = ("hospitals", "hospital_locations", BEDS, "hospital_quality_information")
 
 
 class InjectedCrash(RuntimeError):
@@ -80,6 +83,65 @@ def test_crash_before_commit_keeps_previous_rows(
         assert after == before
     else:
         assert after == [r for r in before if r[0] != "H1"]
+
+
+def _contents(wh: Warehouse) -> dict[str, list[tuple]]:
+    return {t: sorted(tuple(r) for r in wh.read(t).collect()) for t in TABLES}
+
+
+def test_overlapped_load_failure_reruns_clean(
+    spark, warehouse, tmp_path, hhs_csv_1, monkeypatch
+):
+    """A load's table writes run at once.  When one table's commit
+    fails, the load raises once the other writes have finished; those
+    tables committed, and re-running the load then leaves the same
+    rows as one clean load."""
+    publish = SnapshotTable._publish
+
+    def crash_beds(self, *args, **kwargs):
+        if os.path.basename(self.root) == BEDS:
+            raise InjectedCrash("crash in the bed table's publish")
+        return publish(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "_publish", crash_beds)
+        with pytest.raises(InjectedCrash):
+            load_hhs(spark, hhs_csv_1, warehouse)
+    assert not warehouse.exists(BEDS)
+    assert warehouse.exists("hospitals")
+
+    load_hhs(spark, hhs_csv_1, warehouse)
+    clean = Warehouse(spark, str(tmp_path / "clean"))
+    load_hhs(spark, hhs_csv_1, clean)
+    assert _contents(warehouse) == _contents(clean)
+
+
+def test_load_report_and_job_count(spark, warehouse, hhs_csv_1, cms_csv_1):
+    """The LoadReport of the fixture file, and the Spark jobs one load
+    submits (the DAG scheduler's next job id before and after).  The
+    counts come from observed passes and the appends' probes are
+    single-job, so a first HHS load runs 13 jobs and a quality load 6,
+    where a count per split and per append ran 19 and 10."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(load):
+        j0 = int(dag.nextJobId())
+        report = load()
+        return report, int(dag.nextJobId()) - j0
+
+    report, n_jobs = jobs(lambda: load_hhs(spark, hhs_csv_1, warehouse))
+    assert (report.input_rows, report.invalid_rows, report.duplicate_rows) == (6, 1, 1)
+    assert report.table_rows_added == {
+        "hospitals": 3, "hospital_locations": 3, BEDS: 4,
+    }
+    assert n_jobs <= 13
+
+    report, n_jobs = jobs(
+        lambda: load_quality(spark, cms_csv_1, "2022-10-01", warehouse)
+    )
+    assert (report.input_rows, report.invalid_rows, report.duplicate_rows) == (5, 0, 1)
+    assert report.table_rows_added == {"hospital_quality_information": 4}
+    assert n_jobs <= 6
 
 
 def test_old_hive_layout_fails_loudly(spark, warehouse, hhs_csv_1):
